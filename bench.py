@@ -149,7 +149,7 @@ def _warmup(spark) -> None:
             )
         )
         wt = LakeTable.create(spark, f"{wroot}/t", wschema, key="url", num_buckets=4)
-        CDCRunner(wt, salt_buckets=4, lineage_mode="global").run(
+        CDCRunner(wt, salt_buckets=4).run(
             generate_changes(spark, 4000, 400, n_batches=2, seed=1)
         )
     finally:
@@ -213,7 +213,7 @@ def run_cdc_pipeline(
         t0 = time.time()
         runner_kwargs = {} if transform is None else {"transform": transform}
         report = CDCRunner(
-            table, salt_buckets=32, lineage_mode="global", **runner_kwargs
+            table, salt_buckets=32, **runner_kwargs
         ).run(events, fuse=fuse)
         wall = time.time() - t0
         state = table.state_hash()
@@ -430,7 +430,7 @@ def run_mor_ab(
                 num_buckets=num_buckets,
                 merge_on_read=mor,
             )
-            runner = CDCRunner(t, salt_buckets=32, lineage_mode="global")
+            runner = CDCRunner(t, salt_buckets=32)
             runner.run(seed_ev)
             t.compact("seed-fold")  # production cadence: seed lands as base files
             before = {f_["path"] for f_ in t.manifest["files"]}
@@ -499,7 +499,7 @@ def run_cdf_ab(
             num_buckets=num_buckets,
             changelog=True,
         )
-        runner = CDCRunner(t, salt_buckets=32, lineage_mode="global")
+        runner = CDCRunner(t, salt_buckets=32)
         runner.run(
             CDCRunner.stage_by_batch(
                 generate_changes(
@@ -623,7 +623,7 @@ def run_replication_ab(
             )
 
         src_t = mk("src")
-        runner = CDCRunner(src_t, salt_buckets=32, lineage_mode="global")
+        runner = CDCRunner(src_t, salt_buckets=32)
         runner.run(
             CDCRunner.stage_by_batch(
                 generate_changes(
@@ -655,7 +655,7 @@ def run_replication_ab(
             )
             .withColumn("batch_id", F.lit(1))
         )
-        CDCRunner(rep.source.refresh(), salt_buckets=32, lineage_mode="global").run(
+        CDCRunner(rep.source.refresh(), salt_buckets=32).run(
             CDCRunner.stage_by_batch(churn, f"{root}/churn")
         )
         t0 = time.time()

@@ -28,8 +28,6 @@ else carries forward by manifest reference.
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -109,10 +107,15 @@ def split_deadletter(batch: DataFrame, patch_ops: bool = False) -> tuple[DataFra
     return valid, dead
 
 
-def _per_bucket_lineage(j: DataFrame, evt_ts: Column, dirty_actions: tuple):
+# actions that change a bucket's visible contents: a bucket with none
+# of them is clean and carries forward by manifest reference
+_DIRTY_ACTIONS = ("insert", "update", "delete", "patch")
+
+
+def _per_bucket_lineage(j: DataFrame, evt_ts: Column):
     """One aggregation pass over the joined changeset: per-bucket op
     counts (lineage), total counts, watermark, and the dirty-bucket
-    set. Shared by the event-stream and snapshot-compare paths."""
+    set."""
     counts: dict[str, int] = {}
     lineage_rows: list[dict] = []
     max_ts = None
@@ -127,9 +130,125 @@ def _per_bucket_lineage(j: DataFrame, evt_ts: Column, dirty_actions: tuple):
         if r["max_ts"] is not None and (max_ts is None or r["max_ts"] > max_ts):
             max_ts = r["max_ts"]
     dirty = sorted(
-        {r["bucket"] for r in lineage_rows if r["action"] in dirty_actions}
+        {r["bucket"] for r in lineage_rows if r["action"] in _DIRTY_ACTIONS}
     )
     return counts, lineage_rows, max_ts, dirty
+
+
+def _evolve_schema(table: LakeTable, valid: DataFrame, extra_cols: list[str]):
+    """Schema evolution driven by the batch: add every extra payload
+    column the table does not carry yet. Returns the (possibly new)
+    table handle and its column names."""
+    schema_names = table.schema.names()
+    for c in extra_cols:
+        if c not in schema_names:
+            table = table.add_column(c, _lake_type(valid.schema[c].dataType.simpleString()))
+    return table, table.schema.names()
+
+
+def _commit_empty(table: LakeTable, res: MergeResult, summary: dict, pre_commit) -> MergeResult:
+    """Ledger-only commit: records the batch (exactly-once) and its
+    summary without rewriting any bucket."""
+    empty = table.read().limit(0)
+    if pre_commit is not None:
+        pre_commit(res)
+    table.overwrite_buckets(empty, [], res.batch_id, summary=summary)
+    res.snapshot_id = table.snapshot_id
+    return res
+
+
+def _apply_changeset(
+    table: LakeTable,
+    j: DataFrame,
+    res: MergeResult,
+    pre_commit,
+    evt_ts: Column,
+    summary_base: dict,
+    candidates: list[int] | None,
+    **assemble_kw,
+) -> MergeResult:
+    """The apply tail shared by merge_batch and snapshot_batch.
+
+    ``j`` is the action-tagged join (``_action``, ``_b`` and the
+    ``_t_*`` target columns). It is persisted, because both the lineage
+    pass and the write job's three branches (carried / tombstones /
+    changed) scan it. The lineage pass yields the counts, the watermark
+    (max of ``evt_ts``) and the dirty buckets. With no dirty bucket the
+    batch commits ledger-only. Otherwise the dirty buckets' new state is
+    written and committed in one manifest swing: copy-on-write rewrites
+    them whole, merge-on-read appends only the churn as delta files.
+
+    ``res`` carries the batch id and dead letters in and is filled in
+    along the way; ``pre_commit`` sees it just before the commit.
+    ``summary_base`` heads the manifest summary, ``candidates`` (when
+    given) is recorded after it. ``assemble_kw`` are the caller's
+    ``_assemble_new_state`` arguments: its columns, transform and the
+    expressions that differ between the event and snapshot paths."""
+    j = j.persist()
+    try:
+        res.counts, res.lineage, max_ts, dirty = _per_bucket_lineage(j, evt_ts)
+        res.max_warc_ts = max_ts.isoformat() if max_ts else None
+        summary = {
+            **summary_base,
+            "counts": res.counts,
+            "max_warc_ts": res.max_warc_ts,
+            "dirty_buckets": dirty,
+        }
+        if candidates is not None:
+            summary["candidate_buckets"] = candidates
+        if not dirty:
+            return _commit_empty(table, res, summary, pre_commit)
+
+        # Physical shape of the write: everything is clustered by bucket
+        # BEFORE the transform UDF, so the UDF output pipelines straight
+        # into the partitioned parquet write with NO post-UDF exchange.
+        # (A shuffle placed after an Arrow UDF oversubscribes the box —
+        # python workers + shuffle writers — and measurably anti-scales.)
+        # partition count: clustering by _bucket is required (the write
+        # is partitionBy(_bucket); multiple buckets per partition still
+        # write correctly — split by directory). One partition per
+        # dirty bucket is right while buckets ~ a few x cores (wave
+        # slack balances skewed buckets — measured faster than exactly
+        # #cores partitions), but at the 4096-bucket design point on a
+        # small cluster it would over-fragment the Arrow UDF stage into
+        # thousands of tiny python tasks, so cap at 4x parallelism.
+        n_part = max(
+            1, min(len(dirty), 4 * table.spark.sparkContext.defaultParallelism)
+        )
+        mor = bool(table.manifest.get("merge_on_read"))
+        cl_enabled = bool(table.manifest.get("changelog")) and table._wap_id is None
+        new_state, changelog_df, cl_persisted = _assemble_new_state(
+            table,
+            j.filter(F.col("_b").isin([int(b) for b in dirty])),
+            n_part=n_part,
+            include_carried=not mor,
+            changelog=cl_enabled,
+            **assemble_kw,
+        )
+        if pre_commit is not None:
+            pre_commit(res)
+        # merge-on-read: commit the churn as delta files (O(churn)
+        # bytes written); copy-on-write: rewrite the dirty buckets
+        # whole (O(dirty-bucket bytes)). Same new_state pipeline up to
+        # the carried branch; same atomic ledger-keyed commit.
+        writer = table.write_deltas if mor else table.overwrite_buckets
+        try:
+            writer(
+                new_state,
+                dirty,
+                res.batch_id,
+                summary=summary,
+                pre_partitioned=True,
+                changelog_df=changelog_df,
+            )
+        finally:
+            if cl_persisted is not None:
+                cl_persisted.unpersist()
+        res.dirty_buckets = dirty
+        res.snapshot_id = table.snapshot_id
+        return res
+    finally:
+        j.unpersist()
 
 
 def _assemble_new_state(
@@ -297,7 +416,6 @@ def merge_batch(
     batch_id,
     transform=default_transform,
     salt_buckets: int = 16,
-    lineage: str = "per_bucket",
     candidates: list[int] | None = None,
     batch_col: str = "batch_id",
     pre_commit=None,
@@ -328,15 +446,12 @@ def merge_batch(
       WHEN MATCHED AND s.ts= t.ts AND payload diff THEN UPDATE (det. tiebreak)
       WHEN MATCHED AND s.ts< t.ts                  THEN no-op (late event)
 
-    ``lineage`` selects the metrics strategy:
-      * "per_bucket" — a dedicated aggregation pass over the joined
-        changeset yields per-bucket op counts AND lets clean buckets
-        skip rewriting entirely (update-only-if-changed at file
-        granularity). Costs one extra scan of the candidate slice.
-      * "global" — op counts are observed ON the write pass itself
-        (DataFrame.observe: zero extra scans — at 10^10 rows this
-        halves the per-batch IO); all candidate buckets are rewritten,
-        per-bucket lineage degrades to per-bucket file counts.
+    Metrics: one aggregation pass over the persisted join yields the
+    per-bucket op counts (the lineage side output), the watermark and
+    the dirty-bucket set, so clean candidate buckets skip rewriting
+    entirely (update-only-if-changed at file granularity). The apply
+    tail from that pass to the commit is shared with snapshot_batch
+    (``_apply_changeset``).
     """
     if table.is_committed(batch_id):
         return MergeResult(batch_id=batch_id, skipped=True, snapshot_id=table.snapshot_id)
@@ -348,16 +463,6 @@ def merge_batch(
         # (lake/integrity.py) can join the two artifacts precisely
         summary_base["fused_group"] = ",".join(str(b) for b in batch_id)
 
-    debug = os.environ.get("MERGE_DEBUG_TIMING")
-    _t = time.time()
-
-    def _mark(stage):
-        nonlocal _t
-        if debug:
-            now = time.time()
-            print(f"    [merge {batch_id}] {stage}: {now - _t:.2f}s")
-            _t = now
-
     key = table.key
     valid, dead = split_deadletter(batch, patch_ops=patch_ops)
 
@@ -365,11 +470,7 @@ def merge_batch(
     # (the batch-grouping column, whatever its name, is transport
     # metadata — never part of table state) ---
     extra_cols = [c for c in valid.columns if c not in CORE_COLS and c != batch_col]
-    schema_names = table.schema.names()
-    for c in extra_cols:
-        if c not in schema_names:
-            table = table.add_column(c, _lake_type(valid.schema[c].dataType.simpleString()))
-    schema_names = table.schema.names()
+    table, schema_names = _evolve_schema(table, valid, extra_cols)
 
     # --- dedup: one event per url, latest warc_ts wins (salted).
     # Left lazy: it materializes exactly once, inside the (persisted)
@@ -412,31 +513,10 @@ def merge_batch(
     else:
         cand_rows = valid.select(table.bucket_expr(key).alias("b")).distinct().collect()
         cand = sorted(r["b"] for r in cand_rows)
-    _mark("candidates")
 
-    def _pre(counts_=None, lineage_rows_=None):
-        if pre_commit is not None:
-            pre_commit(
-                MergeResult(
-                    batch_id=batch_id,
-                    counts=counts_ or {},
-                    lineage=lineage_rows_ or [],
-                    deadletter=dead,
-                )
-            )
-
+    res = MergeResult(batch_id=batch_id, deadletter=dead)
     if not cand:
-        empty = table.read().limit(0)
-        _pre()
-        table.overwrite_buckets(
-            empty, [], batch_id, summary={**summary_base, "empty_batch": True}
-        )
-        return MergeResult(
-            batch_id=batch_id,
-            counts={},
-            snapshot_id=table.snapshot_id,
-            deadletter=dead,
-        )
+        return _commit_empty(table, res, {**summary_base, "empty_batch": True}, pre_commit)
 
     tgt = table.read(buckets=cand, include_deleted=True)
 
@@ -520,187 +600,71 @@ def merge_batch(
         F.greatest(F.col("_s_ts"), F.col("_s_p_ts")) if patch_ops else F.col("_s_ts")
     )
 
-    obs = None
-    counts: dict[str, int] = {}
-    lineage_rows: list[dict] = []
-    max_ts = None
-    if lineage != "per_bucket":
-        from pyspark.sql import Observation
+    # Patch overlay, per column: a column takes its patch value iff
+    # THAT column's last patch is strictly newer than the resolved
+    # base row — the base is the target for 'patch' actions (full
+    # part lost or absent) and the fresh full value for
+    # insert/update (every folded patch is newer than the full
+    # winner by construction). A column whose last patch is late
+    # keeps the base value; full rows take the event's value
+    # wholesale (an explicit NULL stays NULL).
+    patch_here = F.col("_action") == "patch" if patch_ops else F.lit(False)
+    full_with_pp = (
+        F.col("_s_p_ts").isNotNull() & F.col("_action").isin("insert", "update")
+        if patch_ops
+        else F.lit(False)
+    )
 
-        obs = Observation(f"merge-{batch_id}")
-        obs_actions = ("insert", "update", "delete", "late", "noop", "keep") + (
-            ("patch", "skip_patch") if patch_ops else ()
-        )
-        obs_aggs = [
-            F.count(F.when(F.col("_action") == a, 1)).alias(a) for a in obs_actions
-        ] + [F.max(_evt_ts).alias("max_ts")]
-        j = j.observe(obs, *obs_aggs)
-    # persisted in both modes: the write job scans j in three branches
-    # (carried / tombstones / changed) — the cache populates on first
-    # computation within the action, so the join (and the Observation
-    # metrics in single-pass mode) evaluate exactly once.
-    j = j.persist()
-    try:
-        if lineage == "per_bucket":
-            counts, lineage_rows, max_ts, dirty = _per_bucket_lineage(
-                j, _evt_ts, ("insert", "update", "delete", "patch")
-            )
-            _mark("join+action-agg")
-        else:
-            dirty = list(cand)  # single-pass mode rewrites all candidates
-
-        summary = {
-            **summary_base,
-            "counts": counts,
-            "max_warc_ts": max_ts.isoformat() if max_ts else None,
-            "dirty_buckets": dirty,
-            "candidate_buckets": cand,
-        }
-
-        if not dirty:
-            empty = table.read().limit(0)
-            _pre(counts, lineage_rows)
-            table.overwrite_buckets(empty, [], batch_id, summary=summary)
-            return MergeResult(
-                batch_id=batch_id,
-                counts=counts,
-                lineage=lineage_rows,
-                snapshot_id=table.snapshot_id,
-                max_warc_ts=summary["max_warc_ts"],
-                deadletter=dead,
-            )
-
-        in_dirty = j.filter(F.col("_b").isin([int(b) for b in dirty]))
-
-        # Physical shape of the write: everything is clustered by bucket
-        # BEFORE the transform UDF, so the UDF output pipelines straight
-        # into the partitioned parquet write with NO post-UDF exchange.
-        # (A shuffle placed after an Arrow UDF oversubscribes the box —
-        # python workers + shuffle writers — and measurably anti-scales.)
-        # partition count: clustering by _bucket is required (the write
-        # is partitionBy(_bucket); multiple buckets per partition still
-        # write correctly — split by directory). One partition per
-        # dirty bucket is right while buckets ~ a few x cores (wave
-        # slack balances skewed buckets — measured faster than exactly
-        # #cores partitions), but at the 4096-bucket design point on a
-        # small cluster it would over-fragment the Arrow UDF stage into
-        # thousands of tiny python tasks, so cap at 4x parallelism.
-        n_part = max(
-            1, min(len(dirty), 4 * table.spark.sparkContext.defaultParallelism)
+    def _overlaid(c: str, base_full: Column, base_tgt: Column) -> Column:
+        pv, pt = F.col(f"_s_pv_{c}"), F.col(f"_s_pts_{c}")
+        return (
+            F.when(patch_here & pt.isNotNull() & (pt > F.col("_t_warc_ts")), pv)
+            .when(patch_here, base_tgt)
+            .when(full_with_pp & pt.isNotNull(), pv)
+            .otherwise(base_full)
         )
 
-        # Patch overlay, per column: a column takes its patch value iff
-        # THAT column's last patch is strictly newer than the resolved
-        # base row — the base is the target for 'patch' actions (full
-        # part lost or absent) and the fresh full value for
-        # insert/update (every folded patch is newer than the full
-        # winner by construction). A column whose last patch is late
-        # keeps the base value; full rows take the event's value
-        # wholesale (an explicit NULL stays NULL).
-        patch_here = F.col("_action") == "patch" if patch_ops else F.lit(False)
-        full_with_pp = (
-            F.col("_s_p_ts").isNotNull() & F.col("_action").isin("insert", "update")
-            if patch_ops
-            else F.lit(False)
-        )
+    new_html = (
+        _overlaid("html", F.col("_s_html"), F.col("_t_html"))
+        if patch_ops
+        else F.col("_s_html")
+    )
 
-        def _overlaid(c: str, base_full: Column, base_tgt: Column) -> Column:
-            pv, pt = F.col(f"_s_pv_{c}"), F.col(f"_s_pts_{c}")
-            return (
-                F.when(patch_here & pt.isNotNull() & (pt > F.col("_t_warc_ts")), pv)
-                .when(patch_here, base_tgt)
-                .when(full_with_pp & pt.isNotNull(), pv)
-                .otherwise(base_full)
-            )
+    def _new_payload(c: str) -> Column:
+        src_c = F.col(f"_s_{c}") if c in extra_cols else F.col(f"_t_{c}")
+        if patch_ops and c in extra_cols:
+            return _overlaid(c, F.col(f"_s_{c}"), F.col(f"_t_{c}"))
+        return src_c
 
-        new_html = (
-            _overlaid("html", F.col("_s_html"), F.col("_t_html"))
-            if patch_ops
-            else F.col("_s_html")
-        )
+    # event time of the written row: the last patch's ts whenever a
+    # patch part rode along (it is the newest applied instant)
+    new_ts = (
+        F.when(
+            (patch_here | full_with_pp) & F.col("_s_p_ts").isNotNull(),
+            F.col("_s_p_ts"),
+        ).otherwise(F.col("_s_ts"))
+        if patch_ops
+        else F.col("_s_ts")
+    )
 
-        def _new_payload(c: str) -> Column:
-            src_c = F.col(f"_s_{c}") if c in extra_cols else F.col(f"_t_{c}")
-            if patch_ops and c in extra_cols:
-                return _overlaid(c, F.col(f"_s_{c}"), F.col(f"_t_{c}"))
-            return src_c
-
-        # event time of the written row: the last patch's ts whenever a
-        # patch part rode along (it is the newest applied instant)
-        new_ts = (
-            F.when(
-                (patch_here | full_with_pp) & F.col("_s_p_ts").isNotNull(),
-                F.col("_s_p_ts"),
-            ).otherwise(F.col("_s_ts"))
-            if patch_ops
-            else F.col("_s_ts")
-        )
-
-        mor = bool(table.manifest.get("merge_on_read"))
-        cl_enabled = bool(table.manifest.get("changelog")) and table._wap_id is None
-        new_state, changelog_df, cl_persisted = _assemble_new_state(
-            table,
-            in_dirty,
-            schema_names,
-            extra_cols,
-            transform,
-            n_part,
-            carried_actions=("keep", "late", "noop"),
-            tombstone_ts=F.col("_s_ts"),
-            changed_actions=("insert", "update", "patch"),
-            new_ts=new_ts,
-            new_html=new_html,
-            new_payload=_new_payload,
-            include_carried=not mor,
-            changelog=cl_enabled,
-        )
-        observed: dict = {}
-
-        def _observed_summary() -> dict:
-            # runs after the write action: observe metrics are final and
-            # land in the SAME manifest commit as the data
-            got = obs.get
-            observed["counts"] = {
-                k: v for k, v in got.items() if k != "max_ts" and v
-            }
-            mt = got.get("max_ts")
-            observed["max_warc_ts"] = mt.isoformat() if mt else None
-            return dict(observed)
-
-        _pre(counts, lineage_rows)
-        # merge-on-read: commit the churn as delta files (O(churn)
-        # bytes written); copy-on-write: rewrite the dirty buckets
-        # whole (O(dirty-bucket bytes)). Same new_state pipeline up to
-        # the carried branch; same atomic ledger-keyed commit.
-        writer = table.write_deltas if mor else table.overwrite_buckets
-        try:
-            writer(
-                new_state,
-                dirty,
-                batch_id,
-                summary=summary,
-                pre_partitioned=True,
-                summary_fn=_observed_summary if obs is not None else None,
-                changelog_df=changelog_df,
-            )
-        finally:
-            if cl_persisted is not None:
-                cl_persisted.unpersist()
-        _mark("transform+write+commit")
-        if obs is not None:  # single-pass mode: metrics observed on the write
-            counts = observed["counts"]
-            summary["max_warc_ts"] = observed["max_warc_ts"]
-        return MergeResult(
-            batch_id=batch_id,
-            counts=counts,
-            dirty_buckets=dirty,
-            lineage=lineage_rows,
-            snapshot_id=table.snapshot_id,
-            max_warc_ts=summary["max_warc_ts"],
-            deadletter=dead,
-        )
-    finally:
-        j.unpersist()
+    return _apply_changeset(
+        table,
+        j,
+        res,
+        pre_commit,
+        evt_ts=_evt_ts,
+        summary_base=summary_base,
+        candidates=cand,
+        schema_names=schema_names,
+        extra_cols=extra_cols,
+        transform=transform,
+        carried_actions=("keep", "late", "noop"),
+        tombstone_ts=F.col("_s_ts"),
+        changed_actions=("insert", "update", "patch"),
+        new_ts=new_ts,
+        new_html=new_html,
+        new_payload=_new_payload,
+    )
 
 
 def _lake_type(simple: str) -> str:
@@ -713,7 +677,6 @@ def snapshot_batch(
     snapshot: DataFrame,
     batch_id,
     transform=default_transform,
-    lineage: str = "per_bucket",
     pre_commit=None,
 ) -> MergeResult:
     """Snapshot-compare apply: make the table equal a FULL dimension
@@ -758,11 +721,7 @@ def snapshot_batch(
     dead = dead.drop("op")
 
     extra_cols = [c for c in valid.columns if c not in CORE_COLS]
-    schema_names = table.schema.names()
-    for c in extra_cols:
-        if c not in schema_names:
-            table = table.add_column(c, _lake_type(valid.schema[c].dataType.simpleString()))
-    schema_names = table.schema.names()
+    table, schema_names = _evolve_schema(table, valid, extra_cols)
 
     # a snapshot must be key-unique; keep the latest-ts row if not
     # (defensive — deterministic total order via dedup_latest's hash
@@ -802,88 +761,27 @@ def snapshot_batch(
         .when(row_differs, F.lit("update"))
         .otherwise(F.lit("noop"))
     )
-    j = j.withColumn("_action", action).withColumn("_b", table.bucket_expr(key)).persist()
-    try:
-        counts, lineage_rows, max_ts, dirty = _per_bucket_lineage(
-            j, F.col("_s_ts"), ("insert", "update", "delete")
-        )
-        summary = {
-            "snapshot_compare": True,
-            "counts": counts,
-            "max_warc_ts": max_ts.isoformat() if max_ts else None,
-            "dirty_buckets": dirty,
-        }
-        def _pre():
-            if pre_commit is not None:
-                pre_commit(
-                    MergeResult(
-                        batch_id=batch_id,
-                        counts=counts,
-                        lineage=lineage_rows,
-                        deadletter=dead,
-                    )
-                )
-
-        if not dirty:
-            empty = table.read().limit(0)
-            _pre()
-            table.overwrite_buckets(empty, [], batch_id, summary=summary)
-            return MergeResult(
-                batch_id=batch_id,
-                counts=counts,
-                lineage=lineage_rows,
-                snapshot_id=table.snapshot_id,
-                max_warc_ts=summary["max_warc_ts"],
-                deadletter=dead,
-            )
-        in_dirty = j.filter(F.col("_b").isin([int(b) for b in dirty]))
-        n_part = max(1, min(len(dirty), 4 * table.spark.sparkContext.defaultParallelism))
-
-        # inferred delete: tombstone guarded at the REPLACED row's ts —
-        # late events older than what the snapshot superseded stay dead,
-        # a strictly newer event resurrects (same rule as merge_batch)
-        mor = bool(table.manifest.get("merge_on_read"))
-        cl_enabled = bool(table.manifest.get("changelog")) and table._wap_id is None
-        new_state, changelog_df, cl_persisted = _assemble_new_state(
-            table,
-            in_dirty,
-            schema_names,
-            extra_cols,
-            transform,
-            n_part,
-            carried_actions=("keep", "noop"),
-            tombstone_ts=F.col("_t_warc_ts"),
-            changed_actions=("insert", "update"),
-            new_ts=F.col("_s_ts"),
-            new_html=F.col("_s_html"),
-            new_payload=lambda c: (
-                F.col(f"_s_{c}") if c in extra_cols else F.col(f"_t_{c}")
-            ),
-            include_carried=not mor,
-            changelog=cl_enabled,
-        )
-        _pre()
-        writer = table.write_deltas if mor else table.overwrite_buckets
-        try:
-            writer(
-                new_state,
-                dirty,
-                batch_id,
-                summary=summary,
-                pre_partitioned=True,
-                changelog_df=changelog_df,
-            )
-        finally:
-            if cl_persisted is not None:
-                cl_persisted.unpersist()
-        return MergeResult(
-            batch_id=batch_id,
-            counts=counts,
-            dirty_buckets=dirty,
-            lineage=lineage_rows,
-            snapshot_id=table.snapshot_id,
-            max_warc_ts=summary["max_warc_ts"],
-            deadletter=dead,
-        )
-    finally:
-        j.unpersist()
+    j = j.withColumn("_action", action).withColumn("_b", table.bucket_expr(key))
+    # inferred delete: tombstone guarded at the REPLACED row's ts —
+    # late events older than what the snapshot superseded stay dead,
+    # a strictly newer event resurrects (same rule as merge_batch)
+    return _apply_changeset(
+        table,
+        j,
+        MergeResult(batch_id=batch_id, deadletter=dead),
+        pre_commit,
+        evt_ts=F.col("_s_ts"),
+        summary_base={"snapshot_compare": True},
+        candidates=None,
+        schema_names=schema_names,
+        extra_cols=extra_cols,
+        transform=transform,
+        carried_actions=("keep", "noop"),
+        tombstone_ts=F.col("_t_warc_ts"),
+        changed_actions=("insert", "update"),
+        new_ts=F.col("_s_ts"),
+        new_html=F.col("_s_html"),
+        new_payload=lambda c: (
+            F.col(f"_s_{c}") if c in extra_cols else F.col(f"_t_{c}")
+        ),
+    )

@@ -70,7 +70,6 @@ class CDCRunner:
         lineage_path: str | None = None,
         transform=default_transform,
         salt_buckets: int = 16,
-        lineage_mode: str = "per_bucket",
         drift_floor_pct: float | None = None,
         allow_urls: DataFrame | None = None,
         expire_every: int | None = None,
@@ -85,7 +84,6 @@ class CDCRunner:
         self.lineage_path = lineage_path
         self.transform = transform
         self.salt_buckets = salt_buckets
-        self.lineage_mode = lineage_mode
         self.drift_floor_pct = drift_floor_pct
         self.allow_urls = allow_urls
         # ``expire_every=N``: run snapshot expiry + ledger pruning after
@@ -273,7 +271,6 @@ class CDCRunner:
                     bid,
                     transform=self.transform,
                     salt_buckets=self.salt_buckets,
-                    lineage=self.lineage_mode,
                     candidates=cand,
                     batch_col=batch_col,
                     pre_commit=self._side_outputs,
@@ -300,7 +297,6 @@ class CDCRunner:
             bid,
             transform=self.transform,
             salt_buckets=self.salt_buckets,
-            lineage=self.lineage_mode,
             candidates=cand,
             batch_col=batch_col,
             patch_ops=self.patch_ops,
@@ -336,7 +332,6 @@ class CDCRunner:
                 snapshot,
                 batch_id,
                 transform=self.transform,
-                lineage=self.lineage_mode,
                 pre_commit=self._side_outputs,
             )
         )

@@ -16,8 +16,8 @@ report is ONE Spark job of unioned 1-row aggregates):
 * ``lineage_ledger_mismatch``  — (when a lineage DataFrame is given)
   per-(batch, action) sums in the lineage side-output disagree with
   the counts the commit ledger recorded in the manifest. Two
-  independently-written artifacts must agree (per_bucket lineage mode;
-  global mode records file counts, not action counts — skip it there).
+  independently-written artifacts must agree: both come from the one
+  per-bucket lineage pass of merge_batch / snapshot_batch.
 """
 
 from __future__ import annotations
@@ -67,8 +67,8 @@ def state_checks(table, lineage: DataFrame | None = None) -> DataFrame:
     """Run every invariant over a LakeTable's current state.
 
     Returns a (check, n_violations) DataFrame; a healthy table is all
-    zeros. ``lineage``: the runner's lineage parquet (per_bucket mode)
-    for the ledger reconciliation check.
+    zeros. ``lineage``: the runner's lineage parquet for the ledger
+    reconciliation check.
     """
     key = table.key
     visible = table.read()

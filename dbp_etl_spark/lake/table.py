@@ -87,6 +87,13 @@ class CommitConflict(RuntimeError):
     """Another writer committed since this table handle loaded its snapshot."""
 
 
+def bucket_of(key: Column, num_buckets: int) -> Column:
+    """The table's bucket hash policy: pmod(xxhash64(key), num_buckets).
+    Every bucket assignment (writes, pruning probes, rebucketing) goes
+    through here, so files and pruning always agree."""
+    return F.pmod(F.xxhash64(key), F.lit(num_buckets)).cast("int")
+
+
 def _entry_paths(f: dict):
     """All storage paths a manifest entry references (data file +
     optional bloom sidecar) — the unit of GC liveness."""
@@ -603,8 +610,8 @@ class LakeTable:
         return dict(self.manifest["committed_batches"])
 
     def bucket_expr(self, col: str | None = None) -> Column:
-        """Deterministic bucket id for a key value: pmod(xxhash64(key), B)."""
-        return F.pmod(F.xxhash64(F.col(col or self.key)), F.lit(self.num_buckets)).cast("int")
+        """Deterministic bucket id for a key value (see ``bucket_of``)."""
+        return bucket_of(F.col(col or self.key), self.num_buckets)
 
     # ------------------------------------------------------------------ read
 
@@ -936,7 +943,7 @@ class LakeTable:
     ) -> list[int] | None:
         """Buckets implied by an equality/membership predicate on the
         merge key, or None. Hashing runs as one driver-side row so the
-        bucket function is EXACTLY ``bucket_expr`` (same JVM xxhash64)."""
+        bucket function is EXACTLY ``bucket_of`` (same JVM xxhash64)."""
         vals = None
         for col, op, val in where:
             if col == self.key and op == "=":
@@ -950,9 +957,7 @@ class LakeTable:
         ktype = spark_type(next(c.type for c in current.columns if c.name == self.key))
         row = self.spark.range(1).select(
             *[
-                F.pmod(F.xxhash64(F.lit(v).cast(ktype)), F.lit(num_buckets))
-                .cast("int")
-                .alias(f"b{i}")
+                bucket_of(F.lit(v).cast(ktype), num_buckets).alias(f"b{i}")
                 for i, v in enumerate(vals)
             ]
         ).first()
@@ -1650,7 +1655,6 @@ class LakeTable:
         batch_id,
         summary: dict | None = None,
         pre_partitioned: bool = False,
-        summary_fn=None,
         changelog_df: DataFrame | None = None,
     ) -> "LakeTable":
         """Atomically replace the contents of ``buckets`` with ``df``.
@@ -1658,11 +1662,6 @@ class LakeTable:
         ``df`` must hold the complete new state of those buckets in the
         current schema. Files of untouched buckets carry forward by
         reference — the copy-on-write MERGE primitive.
-
-        ``summary_fn``: called AFTER the data write but BEFORE the
-        manifest commit; its dict merges into ``summary``. Lets callers
-        record metrics observed on the write itself (DataFrame.observe)
-        in the same atomic commit.
 
         ``changelog_df``: this commit's row-level change rows (see
         ``read_changes`` fast path); written BEFORE the manifest commit
@@ -1676,8 +1675,6 @@ class LakeTable:
         snap_id = self.snapshot_id + 1
         ver = self.manifest["schema_version"]
         new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
-        if summary_fn is not None:
-            summary = {**(summary or {}), **summary_fn()}
         if changelog_df is not None:
             summary = {
                 **(summary or {}),
@@ -1716,7 +1713,6 @@ class LakeTable:
         batch_id,
         summary: dict | None = None,
         pre_partitioned: bool = False,
-        summary_fn=None,
         changelog_df: DataFrame | None = None,
     ) -> "LakeTable":
         """Merge-on-read commit: append ``df`` — the CHANGED rows only
@@ -1742,8 +1738,6 @@ class LakeTable:
         snap_id = self.snapshot_id + 1
         ver = self.manifest["schema_version"]
         new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
-        if summary_fn is not None:
-            summary = {**(summary or {}), **summary_fn()}
         if changelog_df is not None:
             summary = {
                 **(summary or {}),
@@ -2278,9 +2272,7 @@ class LakeTable:
         if new_num_buckets == self.num_buckets or self.is_committed(batch_id):
             return self
         snap_id = self.snapshot_id + 1
-        new_bucket = F.pmod(F.xxhash64(F.col(self.key)), F.lit(new_num_buckets)).cast(
-            "int"
-        )
+        new_bucket = bucket_of(F.col(self.key), new_num_buckets)
         rows = (
             self.read(include_deleted=True)
             .withColumn("_bucket", new_bucket)
@@ -2360,9 +2352,7 @@ class LakeTable:
         snap_id = self.snapshot_id + 1
         new_entries: list[dict] = []
         if todo:
-            new_bucket = F.pmod(F.xxhash64(F.col(self.key)), F.lit(new_num_buckets)).cast(
-                "int"
-            )
+            new_bucket = bucket_of(F.col(self.key), new_num_buckets)
             rows = (
                 self.read(buckets=todo, include_deleted=True)
                 .withColumn("_bucket", new_bucket)

@@ -397,7 +397,9 @@ def segment_dedup(
     anywhere.
     """
     seg = df.select(F.col(id_col), F.posexplode(F.col(segs_col)).alias("pos", "seg"))
-    segh = seg.withColumn("h", F.md5(F.col("seg")))
+    # a NULL segment has no content to match: drop it before the
+    # election (the pre-r6 inner join on h dropped it the same way)
+    segh = seg.withColumn("h", F.md5(F.col("seg"))).where(F.col("h").isNotNull())
     # r6 (guide §2.4): the kept rows ARE the per-hash winners, so the
     # election needs no back-join at all — carry the segment text
     # inside the min-struct ((doc,pos) is unique, so the winner is
@@ -498,6 +500,18 @@ def dup_span_mask(
     )
 
 
+def _id_types(df: DataFrame, id_col: str):
+    """The id column's DDL type name and its pyarrow type. mapInArrow
+    lanes declare the first and build their id arrays with the second:
+    type inference from the Python values yields int64 for an int32
+    column, which Spark rejects against the declared schema, and a
+    null-typed array for an all-null batch."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dt = df.schema[id_col].dataType
+    return dt.simpleString(), to_arrow_type(dt)
+
+
 def _distinct_shingle_postings(
     df: DataFrame, id_col: str, content_col: str, n: int
 ) -> DataFrame:
@@ -508,7 +522,7 @@ def _distinct_shingle_postings(
     yield ONE whole-doc shingle, null text yields ''."""
     import pyarrow as pa
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type, id_pa = _id_types(df, id_col)
 
     def batches(it):
         for batch in it:
@@ -539,7 +553,7 @@ def _distinct_shingle_postings(
             if not out_id:
                 continue
             yield pa.record_batch(
-                [pa.array(out_id), pa.array(out_s, type=pa.string())],
+                [pa.array(out_id, type=id_pa), pa.array(out_s, type=pa.string())],
                 names=["_id", "s"],
             )
 
@@ -754,7 +768,7 @@ def _winnow_fingerprints_arrow(
     function of pos within a doc)."""
     import pyarrow as pa
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type, id_pa = _id_types(docs, id_col)
 
     def batches(it):
         import hashlib
@@ -792,10 +806,10 @@ def _winnow_fingerprints_arrow(
                 out_pos.append(sel + 1)
                 out_fp.append(hs[sel])
             if not out_id:
-                continue  # empty output batch would carry a null-typed id
+                continue
             yield pa.record_batch(
                 [
-                    pa.array(out_id),
+                    pa.array(out_id, type=id_pa),
                     pa.array(np.concatenate(out_pos), type=pa.int32()),
                     pa.array(np.concatenate(out_fp), type=pa.int64()),
                 ],
@@ -875,7 +889,7 @@ def _content_defined_chunks_arrow(
     nothing."""
     import pyarrow as pa
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type, id_pa = _id_types(docs, id_col)
     m = 1 << mask_bits
     fields = "id {}, start int, length int, chunk_hash string".format(id_type)
     if with_text:
@@ -939,7 +953,7 @@ def _content_defined_chunks_arrow(
             if not out_id:
                 continue
             cols = [
-                pa.array(out_id),
+                pa.array(out_id, type=id_pa),
                 pa.array(out_s, type=pa.int32()),
                 pa.array(out_l, type=pa.int32()),
                 pa.array(out_h, type=pa.string()),

@@ -6,7 +6,7 @@ Usage (the north-rule invocation shape):
     spark-submit --master <cluster> --py-files /tmp/dbp_etl_spark.zip \
         scripts/submit_cdc_job.py \
         --table /data/pages --events /data/changes [--create] \
-        [--salt-buckets 32] [--lineage global] [--fuse N] \
+        [--salt-buckets 32] [--lineage-path DIR] [--fuse N] \
         [--synthetic N --urls M --batches K]
 
 Tails the change-event parquet at --events (or generates a
@@ -36,7 +36,6 @@ def main() -> int:
     )
     p.add_argument("--num-buckets", type=int, default=32)
     p.add_argument("--salt-buckets", type=int, default=32)
-    p.add_argument("--lineage", choices=["per_bucket", "global"], default="per_bucket")
     p.add_argument("--errors-path")
     p.add_argument("--lineage-path")
     p.add_argument("--synthetic", type=int, help="generate N synthetic events instead of --events")
@@ -122,7 +121,6 @@ def main() -> int:
         errors_path=args.errors_path,
         lineage_path=args.lineage_path,
         salt_buckets=args.salt_buckets,
-        lineage_mode=args.lineage,
         patch_ops=args.patch_ops,
         retry_conflicts=args.retry_conflicts,
     )

@@ -1,5 +1,7 @@
 """Winnowing fingerprint selection (operators/dedup_ops.py, MOSS)."""
 
+import pytest
+
 # ----------------------------------------------------------- winnowing
 
 
@@ -246,3 +248,28 @@ def test_winnow_and_chunk_plan_shapes(spark):
     assert cp.count("Window") == 0
     # the per-character boundary-hash lane is evaluated exactly once
     assert cp.count("Generate explode(CASE WHEN") == 1
+
+
+# ------------------------------------------- Arrow lanes: id types
+
+
+@pytest.mark.parametrize("lane", ["shingle_postings", "winnow", "chunks"])
+@pytest.mark.parametrize("id_type,ids", [("int", [7, 8]), ("bigint", [None, None])])
+def test_arrow_lanes_keep_declared_id_type(spark, lane, id_type, ids):
+    """Each mapInArrow lane builds its id column with the declared id
+    type: an int32 id column and a batch whose ids are all NULL must
+    round-trip instead of failing on an inferred Arrow type."""
+    from dbp_etl_spark.operators import dedup_ops as ops
+
+    rows = [(i, "the quick brown fox jumps over the lazy dog " * 3) for i in ids]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string").coalesce(1)
+    out = {
+        "shingle_postings": lambda: ops._distinct_shingle_postings(df, "doc_id", "text", 3),
+        "winnow": lambda: ops.winnow_fingerprints(df, hash_fn="md5_60"),
+        "chunks": lambda: ops.content_defined_chunks(df, hash_fn="md5_60"),
+    }[lane]()
+    id_field = out.columns[0]
+    assert out.schema[id_field].dataType.simpleString() == id_type
+    got = out.collect()
+    assert got
+    assert {r[id_field] for r in got} == set(ids)

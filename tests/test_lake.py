@@ -269,7 +269,7 @@ def test_state_checks_clean_and_injected_violations(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "chk"), TableSchema.from_struct(PAGES), key="url", num_buckets=4
     )
-    runner = CDCRunner(t, lineage_path=str(tmp_path / "lineage"), lineage_mode="per_bucket")
+    runner = CDCRunner(t, lineage_path=str(tmp_path / "lineage"))
     runner.run(generate_changes(spark, 1500, 80, n_batches=2, seed=5))
     rep = {r["check"]: r["n_violations"] for r in state_checks(t, runner.lineage()).collect()}
     assert rep == {

@@ -277,21 +277,54 @@ def test_lineage_and_errors_side_outputs(spark, tmp_path):
     assert lin.select("partition_id").distinct().count() > 1
 
 
-def test_global_lineage_mode_same_state_and_counts(spark, tmp_path):
-    """Single-pass (observe-metrics) mode produces identical final
-    state, identical change counts, and an identical ledger decision."""
-    events = generate_changes(spark, 2000, 100, n_batches=2, seed=21)
-    t_pb = mk_table(spark, tmp_path, "pb")
-    t_gl = mk_table(spark, tmp_path, "gl")
-    r_pb = CDCRunner(t_pb, lineage_mode="per_bucket").run(events)
-    r_gl = CDCRunner(t_gl, lineage_mode="global").run(events)
-    assert t_pb.state_hash() == t_gl.state_hash()
-    c_pb, c_gl = r_pb.total_counts(), r_gl.total_counts()
-    for k in ("insert", "update", "delete", "late"):
-        assert c_pb.get(k, 0) == c_gl.get(k, 0), (k, c_pb, c_gl)
-    # replay in global mode is still exactly-once
-    rep = CDCRunner(t_gl, lineage_mode="global").run(events)
-    assert rep.n_skipped == rep.n_batches
+# Spark jobs one merge_batch and one snapshot_batch ran on the input of
+# test_apply_tail_job_counts before the two functions shared one apply tail
+# (local[4], 8 shuffle partitions); the shared tail must not add any
+MERGE_JOBS = 11
+SNAPSHOT_JOBS = 8
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_apply_tail_job_counts(spark, tmp_path):
+    """merge_batch and snapshot_batch each run their Spark jobs under
+    their own job group; neither runs more jobs than before the apply
+    tail was shared."""
+    from dbp_etl_spark.cdc import snapshot_batch
+
+    t = mk_table(spark, tmp_path)
+    merge_batch(t, ev(spark, [("u1", 100, b"<p>a</p>", "insert")]), "b0")
+    events = ev(
+        spark,
+        [
+            ("u1", 200, b"<p>a2</p>", "update"),
+            ("u2", 100, b"<p>b</p>", "insert"),
+            ("u3", 100, None, "delete"),
+        ],
+    )
+    merge_jobs = _jobs_in_group(
+        spark, f"merge-{tmp_path.name}", lambda: merge_batch(t, events, "b1")
+    )
+    snap = ev(
+        spark, [("u2", 100, b"<p>b</p>", "insert"), ("u4", 300, b"<p>d</p>", "insert")]
+    ).drop("op")
+    snapshot_jobs = _jobs_in_group(
+        spark, f"snapshot-{tmp_path.name}", lambda: snapshot_batch(t, snap, "s1")
+    )
+    assert {r["url"] for r in t.read().collect()} == {"u2", "u4"}
+    assert merge_jobs <= MERGE_JOBS
+    assert snapshot_jobs <= SNAPSHOT_JOBS
 
 
 def test_hot_key_skew_correctness(spark, tmp_path):
@@ -437,7 +470,7 @@ def test_fused_lineage_reconciles_with_ledger(spark, tmp_path):
 
     events = generate_changes(spark, 1200, 60, n_batches=3, seed=8)
     t = mk_table(spark, tmp_path, "fusedlin")
-    runner = CDCRunner(t, lineage_path=str(tmp_path / "flin"), lineage_mode="per_bucket")
+    runner = CDCRunner(t, lineage_path=str(tmp_path / "flin"))
     runner.run(events, fuse=3)
     rep = {r["check"]: r["n_violations"] for r in state_checks(t, runner.lineage()).collect()}
     assert rep["lineage_ledger_mismatch"] == 0

@@ -135,9 +135,7 @@ def test_patch_lineage_reconciles(spark, tmp_path):
     from dbp_etl_spark.lake.integrity import state_checks
 
     t = mk_table(spark, tmp_path)
-    r = CDCRunner(
-        t, lineage_path=str(tmp_path / "lin"), lineage_mode="per_bucket", patch_ops=True
-    )
+    r = CDCRunner(t, lineage_path=str(tmp_path / "lin"), patch_ops=True)
     r.run(
         pev(
             spark,

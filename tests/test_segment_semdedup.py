@@ -32,6 +32,19 @@ def test_segment_dedup_fully_deduped_doc(spark):
     assert out[2]["n_kept"] == 0 and out[2]["clean_text"] is None
 
 
+def test_segment_dedup_null_segment_is_never_kept(spark):
+    """A NULL array element has no content: it is dropped before the
+    first-occurrence election, so it never counts as a kept segment."""
+    df = spark.createDataFrame(
+        [(1, ["a b", None, "c d"]), (2, [None])], "doc_id int, segments array<string>"
+    )
+    out = {r["doc_id"]: r for r in segment_dedup(df).collect()}
+    assert (out[1]["n_segs"], out[1]["n_kept"]) == (3, 2)
+    assert out[1]["clean_text"] == "a b c d"
+    assert (out[2]["n_segs"], out[2]["n_kept"]) == (1, 0)
+    assert out[2]["clean_text"] is None
+
+
 def test_segment_windows_grouping_and_null(spark):
     df = spark.createDataFrame(
         [(1, "a b c d e"), (2, None)], "doc_id int, text string"

@@ -43,7 +43,6 @@ def test_crash_between_sideoutput_and_commit_no_gap_no_dup(spark, table, tmp_pat
         table,
         errors_path=str(tmp_path / "errors"),
         lineage_path=str(tmp_path / "lineage"),
-        lineage_mode="per_bucket",
     )
     log = _changes(spark, 20, 0).unionByName(_changes(spark, 10, 1, tag="v2"))
 
@@ -70,7 +69,6 @@ def test_crash_between_sideoutput_and_commit_no_gap_no_dup(spark, table, tmp_pat
         t,
         errors_path=str(tmp_path / "errors"),
         lineage_path=str(tmp_path / "lineage"),
-        lineage_mode="per_bucket",
     )
     rep = runner2.run(log)
     assert rep.n_skipped == 1  # batch 0 ledger-skipped
@@ -104,7 +102,7 @@ def test_committed_batch_always_has_sideoutputs(spark, table, tmp_path):
     """Normal path: after a run, every committed batch id has lineage
     rows on disk (write-before-commit ordering)."""
     runner = CDCRunner(
-        table, lineage_path=str(tmp_path / "lineage"), lineage_mode="per_bucket"
+        table, lineage_path=str(tmp_path / "lineage")
     )
     runner.run(_changes(spark, 15, 0).unionByName(_changes(spark, 5, 1, tag="v2")))
     committed = {str(b) for b in (0, 1) if table.is_committed(b)}
