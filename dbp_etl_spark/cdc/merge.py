@@ -23,7 +23,13 @@ Physical shape (the 100 TB story): the batch's keys select candidate
 buckets; only those buckets' files are scanned (file-level pruning);
 the full-outer join runs bucket-partitioned with AQE skew handling;
 only buckets with at least one real change are rewritten; everything
-else carries forward by manifest reference.
+else carries forward by manifest reference. The write has ONE
+exchange: the html->text transform runs on the changed rows in the
+persisted join's partitions, and the union of carried rows, tombstones
+and transformed rows is clustered by bucket once, by the lake write's
+own ``repartition("_bucket")`` (AQE sizes it). Each dirty bucket gains
+one data file per commit, so the next merge's bucket read lists few
+paths.
 """
 
 from __future__ import annotations
@@ -177,6 +183,8 @@ def _apply_changeset(
     batch commits ledger-only. Otherwise the dirty buckets' new state is
     written and committed in one manifest swing: copy-on-write rewrites
     them whole, merge-on-read appends only the churn as delta files.
+    The new state reaches the writer unclustered; the writer's bucket
+    repartition is the write's only exchange.
 
     ``res`` carries the batch id and dead letters in and is filled in
     along the way; ``pre_commit`` sees it just before the commit.
@@ -199,28 +207,11 @@ def _apply_changeset(
         if not dirty:
             return _commit_empty(table, res, summary, pre_commit)
 
-        # Physical shape of the write: everything is clustered by bucket
-        # BEFORE the transform UDF, so the UDF output pipelines straight
-        # into the partitioned parquet write with NO post-UDF exchange.
-        # (A shuffle placed after an Arrow UDF oversubscribes the box —
-        # python workers + shuffle writers — and measurably anti-scales.)
-        # partition count: clustering by _bucket is required (the write
-        # is partitionBy(_bucket); multiple buckets per partition still
-        # write correctly — split by directory). One partition per
-        # dirty bucket is right while buckets ~ a few x cores (wave
-        # slack balances skewed buckets — measured faster than exactly
-        # #cores partitions), but at the 4096-bucket design point on a
-        # small cluster it would over-fragment the Arrow UDF stage into
-        # thousands of tiny python tasks, so cap at 4x parallelism.
-        n_part = max(
-            1, min(len(dirty), 4 * table.spark.sparkContext.defaultParallelism)
-        )
         mor = bool(table.manifest.get("merge_on_read"))
         cl_enabled = bool(table.manifest.get("changelog")) and table._wap_id is None
         new_state, changelog_df, cl_persisted = _assemble_new_state(
             table,
             j.filter(F.col("_b").isin([int(b) for b in dirty])),
-            n_part=n_part,
             include_carried=not mor,
             changelog=cl_enabled,
             **assemble_kw,
@@ -238,7 +229,6 @@ def _apply_changeset(
                 dirty,
                 res.batch_id,
                 summary=summary,
-                pre_partitioned=True,
                 changelog_df=changelog_df,
             )
         finally:
@@ -257,7 +247,6 @@ def _assemble_new_state(
     schema_names: list[str],
     extra_cols: list[str],
     transform,
-    n_part: int,
     carried_actions: tuple,
     tombstone_ts: Column,
     changed_actions: tuple,
@@ -269,9 +258,11 @@ def _assemble_new_state(
 ) -> tuple:
     """Build the complete new contents of the dirty buckets from the
     action-tagged join: carried rows by reference, ts-guarded
-    tombstones, and changed rows routed through the transform — all
-    clustered by _bucket BEFORE the Arrow UDF so its output pipelines
-    straight into the partitioned write (no post-UDF exchange). The
+    tombstones, and changed rows routed through the transform. The
+    transform runs on the changed rows where the persisted join holds
+    them; the three branches are unioned unclustered, and the write's
+    own ``repartition("_bucket")`` (``LakeTable._write_data``) is the
+    one exchange that clusters them by bucket, sized by AQE. The
     event-stream and snapshot-compare paths differ only in the
     expressions they pass in (which actions carry, which instant
     guards a tombstone, how a changed column resolves).
@@ -293,13 +284,11 @@ def _assemble_new_state(
     key = table.key
     carried = in_dirty.filter(F.col("_action").isin(*carried_actions)).select(
         F.col(key),
-        F.col("_b").alias("_bucket"),
         *[F.col(f"_t_{c}").alias(c) for c in schema_names if c != key],
     )
     cur_struct = table.schema.to_struct()
     tombstones = in_dirty.filter(F.col("_action") == "delete").select(
         F.col(key),
-        F.col("_b").alias("_bucket"),
         tombstone_ts.alias("warc_ts"),
         F.lit(True).alias("_deleted"),
         *[
@@ -332,7 +321,6 @@ def _assemble_new_state(
         ]
     changed = in_dirty.filter(F.col("_action").isin(*changed_actions)).select(
         F.col(key),
-        F.col("_b").alias("_bucket"),
         new_ts.alias("warc_ts"),
         new_html.alias("html"),
         *ctx,
@@ -344,7 +332,7 @@ def _assemble_new_state(
         ],
         *cl_extra,
     )
-    changed = transform(changed.repartition(n_part, "_bucket"))
+    changed = transform(changed)
     persisted = None
     changelog_df = None
     if changelog:
@@ -355,10 +343,8 @@ def _assemble_new_state(
                 "changelog-enabled tables require transforms to preserve "
                 "columns they do not recognize"
             )
-        persisted = changed.select(
-            *schema_names, "_bucket", "_cl_action", "_pre"
-        ).persist()
-        changed = persisted.select(*schema_names, "_bucket")
+        persisted = changed.select(*schema_names, "_cl_action", "_pre").persist()
+        changed = persisted.select(*schema_names)
         pre_type = persisted.schema["_pre"].dataType
         changed_cl = persisted.select(
             F.col(key),
@@ -370,43 +356,23 @@ def _assemble_new_state(
         )
         t_dead = F.coalesce(F.col("_t__deleted"), F.lit(False))
         # only a LIVE target's delete changes visible state (absent-key
-        # tombstones and re-tombstones of dead rows do not). Coalesced:
-        # the slice inherits the join's shuffle partitioning (cluster-
-        # sized), but holds only churn rows — without the coalesce a
-        # 4096-partition merge would write 4096 tiny delete files per
-        # commit. Reads come from the persisted join, so no upstream
-        # parallelism is lost.
-        deleted_cl = (
-            in_dirty.filter(
-                (F.col("_action") == "delete")
-                & F.col("_t_warc_ts").isNotNull()
-                & ~t_dead
-            )
-            .select(
-                F.col(key),
-                *[F.col(f"_t_{c}").alias(c) for c in cl_cols],
-                F.lit(None).cast(pre_type).alias("_pre"),
-                F.lit("delete").alias("_change_type"),
-            )
-            .coalesce(n_part)
+        # tombstones and re-tombstones of dead rows do not)
+        deleted_cl = in_dirty.filter(
+            (F.col("_action") == "delete")
+            & F.col("_t_warc_ts").isNotNull()
+            & ~t_dead
+        ).select(
+            F.col(key),
+            *[F.col(f"_t_{c}").alias(c) for c in cl_cols],
+            F.lit(None).cast(pre_type).alias("_pre"),
+            F.lit("delete").alias("_change_type"),
         )
         changelog_df = changed_cl.unionByName(deleted_cl)
     else:
-        changed = changed.select(*schema_names, "_bucket")
-    out_cols = [*schema_names, "_bucket"]
-    if not include_carried:
-        new_state = (
-            tombstones.select(*out_cols)
-            .repartition(n_part, "_bucket")
-            .unionByName(changed)
-        )
-    else:
-        new_state = (
-            carried.select(*out_cols)
-            .unionByName(tombstones.select(*out_cols))
-            .repartition(n_part, "_bucket")
-            .unionByName(changed)
-        )
+        changed = changed.select(*schema_names)
+    new_state = tombstones.select(*schema_names).unionByName(changed)
+    if include_carried:
+        new_state = carried.select(*schema_names).unionByName(new_state)
     return new_state, changelog_df, persisted
 
 

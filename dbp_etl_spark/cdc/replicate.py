@@ -267,15 +267,10 @@ class TableReplicator:
                         if c not in (key, "warc_ts")
                     ],
                 )
-                rows = (
-                    ups.withColumn("_deleted", F.lit(False))
-                    .unionByName(dels.withColumn("_deleted", F.lit(True)))
-                    .withColumn("_bucket", tgt.bucket_expr(key))
-                    .repartition("_bucket")
+                rows = ups.withColumn("_deleted", F.lit(False)).unionByName(
+                    dels.withColumn("_deleted", F.lit(True))
                 )
-                self.target = tgt.write_deltas(
-                    rows, buckets, bid, summary=summary, pre_partitioned=True
-                )
+                self.target = tgt.write_deltas(rows, buckets, bid, summary=summary)
             else:
                 # copy-on-write: rewrite only the dirty buckets — their
                 # surviving rows (feed keys anti-joined away) + upserts
@@ -351,15 +346,10 @@ class TableReplicator:
                 ],
             )
             if tgt.manifest.get("merge_on_read"):
-                rows = (
-                    ups.withColumn("_deleted", F.lit(False))
-                    .unionByName(dels_full.withColumn("_deleted", F.lit(True)))
-                    .withColumn("_bucket", tgt.bucket_expr(key))
-                    .repartition("_bucket")
+                rows = ups.withColumn("_deleted", F.lit(False)).unionByName(
+                    dels_full.withColumn("_deleted", F.lit(True))
                 )
-                self.target = tgt.write_deltas(
-                    rows, buckets, bid, summary=summary, pre_partitioned=True
-                )
+                self.target = tgt.write_deltas(rows, buckets, bid, summary=summary)
             else:
                 all_keys = (
                     ups.select(key).unionByName(dels.select(key)).distinct()

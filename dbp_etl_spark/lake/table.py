@@ -1381,9 +1381,14 @@ class LakeTable:
     ) -> list[dict]:
         """Write df (current-schema columns) bucketed by key; return file entries.
 
-        ``pre_partitioned=True``: the caller already clustered rows by a
-        ``_bucket`` column (e.g. so an upstream pandas UDF pipelines
-        into the write with no post-UDF exchange) — write as-is."""
+        By default the rows are clustered by a ``_bucket`` column computed
+        from the key, in one ``repartition("_bucket")`` that AQE sizes.
+        ``pre_partitioned=True``: the caller already carries and clusters
+        by ``_bucket`` — write as-is. Its callers need that because the
+        default cannot express their layout: ``compact``'s sorted and
+        z-ordered path (range-partitioned and sorted within buckets) and
+        ``rebucket``/``migrate_to_buckets`` (bucket ids under the NEW bucket
+        count)."""
         schema = self.schema_at(schema_version)
         # unique dir per write ATTEMPT: if a crash lands between the
         # data write and the manifest publish, the orphan files sit in
@@ -1531,9 +1536,11 @@ class LakeTable:
         # bound output file count: changelog rows are churn-sized, but
         # the frames arrive with scan/shuffle partitioning (DML frames
         # inherit the dirty-bucket scan's split count). The repartition
-        # shuffles only churn rows and keeps the upstream scan wide;
-        # the merge path pre-coalesces its slices, so this is a no-op
-        # exchange of already-small partitions there.
+        # shuffles only churn rows and keeps the upstream scan wide.
+        # The merge's frame is the union of two slices in the persisted
+        # join's partitioning, so it too usually exceeds the bound: a
+        # 150-event merge on 4 cores arrives with 8 partitions and pays
+        # an 8-task shuffle stage before its 4-task write.
         bound = max(1, min(64, self.spark.sparkContext.defaultParallelism))
         if df.rdd.getNumPartitions() > bound:
             df = df.repartition(bound)
@@ -1712,7 +1719,6 @@ class LakeTable:
         buckets: list[int],
         batch_id,
         summary: dict | None = None,
-        pre_partitioned: bool = False,
         changelog_df: DataFrame | None = None,
     ) -> "LakeTable":
         """Merge-on-read commit: append ``df`` — the CHANGED rows only
@@ -1737,7 +1743,7 @@ class LakeTable:
             return self
         snap_id = self.snapshot_id + 1
         ver = self.manifest["schema_version"]
-        new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
+        new_files = self._write_data(df, snap_id, ver)
         if changelog_df is not None:
             summary = {
                 **(summary or {}),
@@ -1833,14 +1839,7 @@ class LakeTable:
         buckets = sorted(
             r["b"] for r in rows.select(self.bucket_expr(key).alias("b")).distinct().collect()
         )
-        rows = rows.withColumn("_bucket", self.bucket_expr(key)).repartition("_bucket")
-        return self.write_deltas(
-            rows,
-            buckets,
-            batch_id,
-            summary={"equality_delete": True},
-            pre_partitioned=True,
-        )
+        return self.write_deltas(rows, buckets, batch_id, summary={"equality_delete": True})
 
     def append(
         self,

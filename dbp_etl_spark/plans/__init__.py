@@ -2,7 +2,6 @@
 
 from dbp_etl_spark.plans.checks import (  # noqa: F401
     assert_broadcast_join,
-    assert_no_exchange_above_python_udf,
     assert_pushed_filter,
     count_exchanges,
     plan_str,

@@ -277,11 +277,11 @@ def test_lineage_and_errors_side_outputs(spark, tmp_path):
     assert lin.select("partition_id").distinct().count() > 1
 
 
-# Spark jobs one merge_batch and one snapshot_batch ran on the input of
-# test_apply_tail_job_counts before the two functions shared one apply tail
-# (local[4], 8 shuffle partitions); the shared tail must not add any
-MERGE_JOBS = 11
-SNAPSHOT_JOBS = 8
+# Spark jobs one merge_batch and one snapshot_batch run on the input of
+# test_apply_tail_job_counts (local[4], 8 shuffle partitions), measured
+# with the write's one bucket exchange after the transform
+MERGE_JOBS = 10
+SNAPSHOT_JOBS = 7
 
 
 def _jobs_in_group(spark, group, fn):
@@ -299,8 +299,8 @@ def _jobs_in_group(spark, group, fn):
 
 def test_apply_tail_job_counts(spark, tmp_path):
     """merge_batch and snapshot_batch each run their Spark jobs under
-    their own job group; neither runs more jobs than before the apply
-    tail was shared."""
+    their own job group; neither runs more jobs than MERGE_JOBS and
+    SNAPSHOT_JOBS."""
     from dbp_etl_spark.cdc import snapshot_batch
 
     t = mk_table(spark, tmp_path)
@@ -325,6 +325,30 @@ def test_apply_tail_job_counts(spark, tmp_path):
     assert {r["url"] for r in t.read().collect()} == {"u2", "u4"}
     assert merge_jobs <= MERGE_JOBS
     assert snapshot_jobs <= SNAPSHOT_JOBS
+
+
+@pytest.mark.parametrize("layout", ["cow_changelog", "mor"])
+def test_merge_writes_one_file_per_dirty_bucket(spark, tmp_path, layout):
+    """The merge clusters its new state by bucket in ONE exchange, the
+    write's own, after the transform: each dirty bucket gains exactly
+    one data file per commit. A separate exchange per branch (carried
+    and tombstone rows, changed rows) writes one file per branch."""
+    kw = {"changelog": True} if layout == "cow_changelog" else {"merge_on_read": True}
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), TableSchema.from_struct(PAGES), num_buckets=8, **kw
+    )
+    merge_batch(
+        t,
+        ev(spark, [(f"u{i}", 100, f"<p>{i}</p>".encode(), "insert") for i in range(200)]),
+        "b0",
+    )
+    before = {f["path"] for f in t.manifest["files"]}
+    changes = [(f"u{i}", 200, f"<p>{i}b</p>".encode(), "update") for i in range(0, 200, 3)]
+    changes += [(f"u{i}", 200, None, "delete") for i in range(1, 200, 3)]
+    res = merge_batch(t, ev(spark, changes), "b1")
+    new = [f["bucket"] for f in t.manifest["files"] if f["path"] not in before]
+    assert res.dirty_buckets == list(range(8))
+    assert sorted(new) == res.dirty_buckets
 
 
 def test_hot_key_skew_correctness(spark, tmp_path):

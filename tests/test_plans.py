@@ -1,12 +1,10 @@
-"""Plan-shape regression tests: pushdown, pruning, broadcast, and the
-no-exchange-above-UDF invariant of the merge write path."""
+"""Plan-shape regression tests: pushdown, pruning, broadcast and
+exchange counts."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from dbp_etl_spark.plans import (
     assert_broadcast_join,
-    assert_no_exchange_above_python_udf,
     assert_pushed_filter,
     count_exchanges,
 )
@@ -27,46 +25,6 @@ def test_broadcast_dim_chain(spark):
 
     df = QUERIES["revenue_by_region"](spark, SF)
     assert_broadcast_join(df, at_least=2)  # nation and region broadcast
-
-
-def test_merge_write_plan_has_no_exchange_above_udf(spark, tmp_path):
-    """The perf invariant from cdc/merge.py: the transform UDF must
-    pipeline into the parquet write (repartition happens BEFORE it)."""
-    from pyspark.sql import types as T
-
-    from dbp_etl_spark.cdc import generate_changes
-    from dbp_etl_spark.cdc.merge import default_transform
-    from dbp_etl_spark.lake import LakeTable, TableSchema
-
-    schema = TableSchema.from_struct(
-        T.StructType(
-            [
-                T.StructField("url", T.StringType()),
-                T.StructField("warc_ts", T.TimestampType()),
-                T.StructField("html", T.BinaryType()),
-                T.StructField("text", T.StringType()),
-                T.StructField("lang", T.StringType()),
-            ]
-        )
-    )
-    table = LakeTable.create(spark, str(tmp_path / "t"), schema, num_buckets=8)
-    ev = generate_changes(spark, 500, 50, n_batches=1)
-    changed = ev.filter(F.col("op") != "delete").select(
-        "url",
-        table.bucket_expr().alias("_bucket"),
-        "warc_ts",
-        "html",
-        F.lit(True).alias("_payload_changed"),
-        F.lit(None).cast("string").alias("_old_text"),
-        F.lit(None).cast("string").alias("_old_lang"),
-        F.lit(False).alias("_deleted"),
-    )
-    out = default_transform(changed.repartition(8, "_bucket"))
-    assert_no_exchange_above_python_udf(out)
-    # and the anti-pattern is correctly detected
-    bad = out.repartition(4, "url")
-    with pytest.raises(AssertionError):
-        assert_no_exchange_above_python_udf(bad)
 
 
 def test_exchange_count_single_shuffle_agg(spark):

@@ -2,6 +2,7 @@
 compaction, drift guard, dead-letter allowlist."""
 
 import os
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -94,6 +95,15 @@ def test_compact_reduces_files_preserves_state(spark, tmp_path):
     )
     runner = CDCRunner(t)
     runner.run(generate_changes(spark, 1000, 80, n_batches=3, seed=5))
+    # a merge rewrites each dirty bucket as one file; a bulk append adds
+    # files beside them, which is the fragmentation compaction folds
+    t.append(
+        spark.createDataFrame(
+            [(f"https://bulk/{i}", datetime(2020, 1, 1), b"<p>b</p>", "b", "en") for i in range(40)],
+            PAGES,
+        ),
+        "bulk-1",
+    )
     h_before = t.state_hash()
     files_before = len(t.manifest["files"])
     t.compact(batch_id="compact-1")
