@@ -25,9 +25,10 @@ the full-outer join runs bucket-partitioned with AQE skew handling;
 only buckets with at least one real change are rewritten; everything
 else carries forward by manifest reference. The write has ONE
 exchange: the html->text transform runs on the changed rows in the
-persisted join's partitions, and the union of carried rows, tombstones
-and transformed rows is clustered by bucket once, by the lake write's
-own ``repartition("_bucket")`` (AQE sizes it). Each dirty bucket gains
+persisted join's partitions, coalesced to one wave of tasks, and the
+union of carried rows, tombstones and transformed rows is clustered by
+bucket once, by the lake write's own ``repartition("_bucket")`` (AQE
+sizes it). Each dirty bucket gains
 one data file per commit, so the next merge's bucket read lists few
 paths.
 """
@@ -260,9 +261,10 @@ def _assemble_new_state(
     action-tagged join: carried rows by reference, ts-guarded
     tombstones, and changed rows routed through the transform. The
     transform runs on the changed rows where the persisted join holds
-    them; the three branches are unioned unclustered, and the write's
-    own ``repartition("_bucket")`` (``LakeTable._write_data``) is the
-    one exchange that clusters them by bucket, sized by AQE. The
+    them, coalesced (no exchange) to one wave of tasks; the three
+    branches are unioned unclustered, and the write's own
+    ``repartition("_bucket")`` (``LakeTable._write_data``) is the one
+    exchange that clusters them by bucket, sized by AQE. The
     event-stream and snapshot-compare paths differ only in the
     expressions they pass in (which actions carry, which instant
     guards a tombstone, how a changed column resolves).
@@ -332,7 +334,12 @@ def _assemble_new_state(
         ],
         *cl_extra,
     )
-    changed = transform(changed)
+    # an Arrow UDF task costs about 0.1 s of Python start-up even on an
+    # empty partition, and the persisted join keeps its shuffle
+    # partition count: narrow the changed rows to one wave of tasks
+    # (coalesce, no exchange) before the transform
+    par = table.spark.sparkContext.defaultParallelism
+    changed = transform(changed.coalesce(par))
     persisted = None
     changelog_df = None
     if changelog:
@@ -367,7 +374,10 @@ def _assemble_new_state(
             F.lit(None).cast(pre_type).alias("_pre"),
             F.lit("delete").alias("_change_type"),
         )
-        changelog_df = changed_cl.unionByName(deleted_cl)
+        # both slices read persisted rows, so narrowing them loses no
+        # upstream parallelism and keeps the frame within the changelog
+        # writer's file-count bound (no shuffle there)
+        changelog_df = changed_cl.unionByName(deleted_cl).coalesce(par)
     else:
         changed = changed.select(*schema_names)
     new_state = tombstones.select(*schema_names).unionByName(changed)

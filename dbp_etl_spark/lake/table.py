@@ -1537,10 +1537,8 @@ class LakeTable:
         # the frames arrive with scan/shuffle partitioning (DML frames
         # inherit the dirty-bucket scan's split count). The repartition
         # shuffles only churn rows and keeps the upstream scan wide.
-        # The merge's frame is the union of two slices in the persisted
-        # join's partitioning, so it too usually exceeds the bound: a
-        # 150-event merge on 4 cores arrives with 8 partitions and pays
-        # an 8-task shuffle stage before its 4-task write.
+        # The merge reads its changelog slices from persisted rows and
+        # coalesces them to the bound itself, so it skips this shuffle.
         bound = max(1, min(64, self.spark.sparkContext.defaultParallelism))
         if df.rdd.getNumPartitions() > bound:
             df = df.repartition(bound)
