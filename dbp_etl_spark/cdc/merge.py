@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from dbp_etl_spark.cdc.dedup import cdc_order, dedup_latest, dedup_latest_cdc
 from dbp_etl_spark.functions.extract import extract_and_lang_udf
-from dbp_etl_spark.lake.table import LakeTable
+from dbp_etl_spark.lake.table import LakeTable, changelog_partitions
 
 VALID_OPS = ("insert", "update", "delete")
 
@@ -337,9 +337,13 @@ def _assemble_new_state(
     # an Arrow UDF task costs about 0.1 s of Python start-up even on an
     # empty partition, and the persisted join keeps its shuffle
     # partition count: narrow the changed rows to one wave of tasks
-    # (coalesce, no exchange) before the transform
-    par = table.spark.sparkContext.defaultParallelism
-    changed = transform(changed.coalesce(par))
+    # (coalesce, no exchange) before the transform. The deduplicated
+    # changed rows spread evenly over the join's key-hashed
+    # partitions, so one wave leaves no straggler tail on large
+    # batches either.
+    changed = transform(
+        changed.coalesce(table.spark.sparkContext.defaultParallelism)
+    )
     persisted = None
     changelog_df = None
     if changelog:
@@ -374,10 +378,12 @@ def _assemble_new_state(
             F.lit(None).cast(pre_type).alias("_pre"),
             F.lit("delete").alias("_change_type"),
         )
-        # both slices read persisted rows, so narrowing them loses no
-        # upstream parallelism and keeps the frame within the changelog
-        # writer's file-count bound (no shuffle there)
-        changelog_df = changed_cl.unionByName(deleted_cl).coalesce(par)
+        # both slices read persisted rows, so narrowing them to the
+        # changelog writer's file-count bound loses no upstream
+        # parallelism and spares the writer its bounding shuffle
+        changelog_df = changed_cl.unionByName(deleted_cl).coalesce(
+            changelog_partitions(table.spark)
+        )
     else:
         changed = changed.select(*schema_names)
     new_state = tombstones.select(*schema_names).unionByName(changed)

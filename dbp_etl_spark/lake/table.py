@@ -94,6 +94,13 @@ def bucket_of(key: Column, num_buckets: int) -> Column:
     return F.pmod(F.xxhash64(key), F.lit(num_buckets)).cast("int")
 
 
+def changelog_partitions(spark: SparkSession) -> int:
+    """The changelog writer's file-count bound: one file per core, at
+    most 64, per commit. ``_write_changelog`` shuffles a frame down to
+    it; a writer whose frame is cheap to narrow coalesces to it first."""
+    return max(1, min(64, spark.sparkContext.defaultParallelism))
+
+
 def _entry_paths(f: dict):
     """All storage paths a manifest entry references (data file +
     optional bloom sidecar) — the unit of GC liveness."""
@@ -1538,8 +1545,8 @@ class LakeTable:
         # inherit the dirty-bucket scan's split count). The repartition
         # shuffles only churn rows and keeps the upstream scan wide.
         # The merge reads its changelog slices from persisted rows and
-        # coalesces them to the bound itself, so it skips this shuffle.
-        bound = max(1, min(64, self.spark.sparkContext.defaultParallelism))
+        # coalesces them to this bound itself, so it skips this shuffle.
+        bound = changelog_partitions(self.spark)
         if df.rdd.getNumPartitions() > bound:
             df = df.repartition(bound)
         conf = self.spark.conf
