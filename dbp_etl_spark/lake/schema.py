@@ -124,6 +124,15 @@ class TableSchema:
     def by_id(self) -> dict[int, ColumnSpec]:
         return {c.col_id: c for c in self.columns}
 
+    def names_of(self, col_ids: list[int]) -> list[str | None]:
+        """This schema's name for each id in ``col_ids``, None where it
+        has no such column. The one alignment rule of every reader of
+        older files: columns match by immutable id, so a rename keeps its
+        values and a dropped then re-added column (fresh id) never picks
+        up the dropped column's bytes."""
+        by_id = self.by_id()
+        return [by_id[i].name if i in by_id else None for i in col_ids]
+
     # --- evolution ops (each returns a NEW TableSchema) ---
 
     def add_column(self, name: str, type_name: str, col_id: int | None = None) -> "TableSchema":

@@ -49,12 +49,14 @@ import os
 import re
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbp_etl_spark.lake.fs import Filesystem, fs_for
-from dbp_etl_spark.lake.schema import TableSchema, spark_type
+from dbp_etl_spark.lake.schema import ColumnSpec, TableSchema, spark_type
 from dbp_etl_spark.lake.stats import (
     collect_file_stats,
     file_may_match,
@@ -155,6 +157,95 @@ def _row_change_of(m: dict) -> str:
     if s.get("dirty_buckets") == [] and "counts" in s:
         return "none"
     return "unknown"
+
+
+def _schema_of(m: dict) -> TableSchema:
+    """The schema manifest ``m`` is current under."""
+    return TableSchema.from_json(m["schemas"][str(m["schema_version"])])
+
+
+def _feed_columns(schema: TableSchema, key: str) -> list[ColumnSpec]:
+    """``schema``'s columns in change-feed order: key first, then the
+    rest minus the ``_deleted`` tombstone flag."""
+    return sorted(
+        (c for c in schema.columns if c.name != "_deleted"), key=lambda c: c.name != key
+    )
+
+
+def _window_struct(schema: TableSchema, key: str) -> T.StructType:
+    """The changelog row shape under ``schema`` — the one internal form
+    of a change window: the feed columns, a ``_pre`` struct of the
+    non-key columns (update pre-images; a delete row carries its old
+    image in the regular columns) and ``_change_type``."""
+    st = schema.to_struct()
+    fields = [st[c.name] for c in _feed_columns(schema, key)]
+    return T.StructType(
+        [
+            *fields,
+            T.StructField("_pre", T.StructType(fields[1:])),
+            T.StructField("_change_type", T.StringType()),
+        ]
+    )
+
+
+def _aligned(
+    to_cols: list[ColumnSpec], to_struct: T.StructType, src: TableSchema, get=F.col
+) -> list[Column]:
+    """``to_cols`` read from a frame written under ``src``: each is
+    ``get`` of ``src``'s column with the same id cast to its to-type,
+    or a typed NULL when ``src`` has no such column."""
+    return [
+        (get(s) if s is not None else F.lit(None)).cast(to_struct[c.name].dataType).alias(c.name)
+        for c, s in zip(to_cols, src.names_of([c.col_id for c in to_cols]))
+    ]
+
+
+def _feed_rows(window: DataFrame, key: str, include_pre: bool) -> DataFrame:
+    """read_changes' rows from a change window: ``_pre`` dropped, or
+    each update row inlined to an ``update_post`` + ``update_pre`` pair
+    in the same pass (no second scan or diff per consumer)."""
+    if not include_pre:
+        return window.drop("_pre")
+    others = [c for c in window.columns if c not in (key, "_pre", "_change_type")]
+    ct = F.col("_change_type")
+    post = F.struct(*others, ct)
+    pre = F.struct(
+        *[F.col("_pre").getField(c).alias(c) for c in others],
+        F.lit("update_pre").alias("_change_type"),
+    )
+    rows = F.when(ct == "update_post", F.array(post, pre)).otherwise(F.array(post))
+    return window.select(F.col(key), F.inline(rows))
+
+
+class _Commit(NamedTuple):
+    """One commit of a change window, as the feed readers see it."""
+
+    snap: int
+    summary: dict
+    row_change: str  # _row_change_of
+    schema: TableSchema  # the schema its feed rows were written under
+    files: list[str]  # feed files, relative to the table root
+    insert_only: bool  # files are the data files of an append(feed='insert')
+
+
+def _window_commits(manifest_at, from_snapshot: int, to_snapshot: int):
+    """Yield each commit in (from, to], loading manifests lazily through
+    ``manifest_at(snap)`` so a caller can stop at the first uncovered
+    one. Pure Python: the streaming source plans with it in Python
+    workers that have no SparkSession."""
+    for snap in range(from_snapshot + 1, to_snapshot + 1):
+        m = manifest_at(snap)
+        s = m.get("summary") or {}
+        from_data = s.get("changelog_from_data")
+        sv = s.get("changelog_schema_version", m["schema_version"])
+        yield _Commit(
+            snap,
+            s,
+            _row_change_of(m),
+            TableSchema.from_json(m["schemas"][str(sv)]),
+            from_data or _changelog_paths(m),
+            bool(from_data),
+        )
 
 
 class LakeTable:
@@ -672,10 +763,8 @@ class LakeTable:
                     f"{self.min_retained_snapshot}); raise keep_last on "
                     "expire_snapshots to retain more history"
                 )
-            manifest = json.loads(
-                self._fs.read_text(os.path.join(self.root, _META, f"v{snapshot_id}.json"))
-            )
-        current = TableSchema.from_json(manifest["schemas"][str(manifest["schema_version"])])
+            manifest = self._manifest_at(snapshot_id)
+        current = _schema_of(manifest)
         files = self._prune_entries(manifest, current, buckets, where)
 
         cur_struct = current.to_struct()
@@ -729,19 +818,7 @@ class LakeTable:
         for ver, paths in sorted(by_ver.items()):
             written = TableSchema.from_json(manifest["schemas"][str(ver)])
             df = self.spark.read.schema(written.to_struct()).parquet(*paths)
-            written_by_id = {c.col_id: c for c in written.columns}
-            projection = []
-            for cur_col in current.columns:
-                old = written_by_id.get(cur_col.col_id)
-                if old is None:  # column added after these files were written
-                    projection.append(
-                        F.lit(None).cast(cur_struct[cur_col.name].dataType).alias(cur_col.name)
-                    )
-                else:  # rename and/or widen by id
-                    projection.append(
-                        F.col(old.name).cast(cur_struct[cur_col.name].dataType).alias(cur_col.name)
-                    )
-            parts.append(df.select(*projection))
+            parts.append(df.select(*_aligned(current.columns, cur_struct, written)))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -826,11 +903,8 @@ class LakeTable:
         scan — the metadata-only plan, for tests and the admin CLI."""
         manifest = self.manifest
         if snapshot_id is not None and snapshot_id != manifest["snapshot_id"]:
-            manifest = json.loads(
-                self._fs.read_text(os.path.join(self.root, _META, f"v{snapshot_id}.json"))
-            )
-        current = TableSchema.from_json(manifest["schemas"][str(manifest["schema_version"])])
-        return self._prune_entries(manifest, current, buckets, where)
+            manifest = self._manifest_at(snapshot_id)
+        return self._prune_entries(manifest, _schema_of(manifest), buckets, where)
 
     def _prune_entries(
         self,
@@ -1013,29 +1087,35 @@ class LakeTable:
         that must RETRACT the old contribution (incremental group-bys,
         maintained indexes; see operators/incremental.py).
 
-        Physical shape: the two manifests are diffed for buckets whose
-        file sets changed — only THOSE buckets' rows (old + new) are
-        scanned; the row diff is one bucket-partitioned full-outer join
-        keyed like the MERGE itself. Untouched buckets contribute
-        nothing and are never read. Cost scales with the churn, not the
-        table.
+        Physical shape: both paths build the window in the changelog's
+        own row shape (``_change_window``), and one tail turns it into
+        the feed — ``_pre`` dropped, or each update inlined to its
+        post+pre pair in the same pass (no second scan or diff). The
+        join path diffs the two manifests for buckets whose file sets
+        changed — only THOSE buckets' rows (old + new) are scanned; the
+        row diff is one bucket-partitioned full-outer join keyed like
+        the MERGE itself. Untouched buckets contribute nothing and are
+        never read. Cost scales with the churn, not the table.
 
         Contract: assumes key-unique visible state (the MERGE-path
         invariant, checked by lake/integrity.py). On a bulk-append
         table with duplicate keys the full-outer diff would pair rows
-        cross-product-style per key. Old-side rows align to the
-        to-snapshot schema by COLUMN ID (matching read()'s projection):
-        a rename inside the window keeps its pre-image (same id); a
-        drop+re-add inside the window reads NULL pre-images for the new
-        column (fresh id — the dropped column's bytes never leak in as
-        the pre-image of an unrelated column).
+        cross-product-style per key. Rows align to the to-snapshot
+        schema by COLUMN ID (``TableSchema.names_of``, the rule read()
+        projects with): a rename inside the window keeps its pre-image
+        (same id); a drop+re-add inside the window reads NULL
+        pre-images for the new column (fresh id — the dropped column's
+        bytes never leak in as the pre-image of an unrelated column).
 
         ``use_changelog``: ``None`` (default) serves the window from
         write-time changelog files whenever every in-window commit is
-        covered (``create(changelog=True)``) — cost O(churn in window)
-        with NO table scan — and falls back to the join otherwise;
-        ``False`` forces the join path; ``True`` requires changelog
-        coverage and raises if any in-window commit lacks it.
+        covered (``create(changelog=True)``) — a one-commit window is
+        that commit's file scan as-is (no exchange), a longer one
+        net-merges per key; O(churn in window) with NO table scan — and
+        falls back to the join otherwise; ``False`` forces the join
+        path (the reference the parity tests compare against); ``True``
+        requires changelog coverage and raises if any in-window commit
+        lacks it.
         """
         to_snapshot = self.snapshot_id if to_snapshot is None else to_snapshot
         if from_snapshot < self.min_retained_snapshot:
@@ -1045,100 +1125,76 @@ class LakeTable:
             )
         if from_snapshot > to_snapshot:
             raise ValueError("from_snapshot must be <= to_snapshot")
-        if to_snapshot == self.snapshot_id:
-            to_manifest = self.manifest
-        else:
-            to_manifest = json.loads(
-                self._fs.read_text(os.path.join(self.root, _META, f"v{to_snapshot}.json"))
-            )
-        # the feed's schema is AS OF to_snapshot — aligning to the head
-        # schema instead would null-fill a column renamed/dropped AFTER
-        # the window on both sides and hide its in-window changes
-        to_schema = TableSchema.from_json(
-            to_manifest["schemas"][str(to_manifest["schema_version"])]
-        )
+        window = self._change_window(from_snapshot, to_snapshot, use_changelog)
+        return _feed_rows(window, self.key, include_pre)
 
+    def _change_window(
+        self, from_snapshot: int, to_snapshot: int, use_changelog: bool | None = None
+    ) -> DataFrame:
+        """The net change of (from, to] in the changelog's row shape
+        ``(key, cols…, _pre, _change_type)`` (see ``_window_struct``),
+        ``_change_type`` in insert/update_post/delete: delete rows carry
+        the old image in the regular columns, update rows carry it in
+        ``_pre``. The columns are the to-snapshot schema's — aligning to
+        the head schema instead would null-fill a column renamed or
+        dropped AFTER the window on both sides and hide its changes."""
+        to_schema = _schema_of(self._manifest_at(to_snapshot))
         if use_changelog is not False:
             window = self._changelog_window(from_snapshot, to_snapshot)
             if window is not None:
-                return self._changes_from_log(window, to_schema, include_pre)
+                return self._changes_from_log(window, to_schema)
             if use_changelog is True:
                 raise ValueError(
                     "changelog does not cover snapshots "
                     f"({from_snapshot}, {to_snapshot}] — a commit in the "
                     "window has row-level changes without a changelog"
                 )
+        return self._changes_from_join(from_snapshot, to_snapshot, to_schema)
 
-        def _files_of(snap: int) -> dict[int, frozenset]:
-            if snap == self.snapshot_id:
-                m = self.manifest
-            else:
-                m = json.loads(
-                    self._fs.read_text(os.path.join(self.root, _META, f"v{snap}.json"))
-                )
+    def _empty_window(self, to_schema: TableSchema) -> DataFrame:
+        return self.spark.createDataFrame([], _window_struct(to_schema, self.key))
+
+    def _changes_from_join(
+        self, from_snapshot: int, to_snapshot: int, to_schema: TableSchema
+    ) -> DataFrame:
+        """The change window diffed from two snapshots' visible state:
+        one full-outer join over the buckets whose file sets differ."""
+
+        def _files_by_bucket(m: dict) -> dict[int, frozenset]:
             by_bucket: dict[int, set] = {}
             for f_ in m["files"]:
                 by_bucket.setdefault(f_["bucket"], set()).add(f_["path"])
             return {b: frozenset(s) for b, s in by_bucket.items()}
 
-        old_files = _files_of(from_snapshot)
-        new_files = _files_of(to_snapshot)
+        from_manifest = self._manifest_at(from_snapshot)
+        old_files = _files_by_bucket(from_manifest)
+        new_files = _files_by_bucket(self._manifest_at(to_snapshot))
         dirty = sorted(
             b
             for b in set(old_files) | set(new_files)
             if old_files.get(b) != new_files.get(b)
         )
-        key = self.key
-        cols = [c for c in to_schema.names() if c != "_deleted"]
         if not dirty:
-            empty = self.read(buckets=[])
-            return empty.withColumn("_change_type", F.lit("")).limit(0)
+            return self._empty_window(to_schema)
 
-        cur_struct = to_schema.to_struct()
-        # old-side alignment map: to-snapshot column -> from-snapshot
-        # NAME of the SAME column id (None if the id did not exist yet).
-        # Mirrors read()'s column-id projection: a rename keeps its
-        # pre-image; a drop+re-add (fresh id) gets NULL pre-images
-        # instead of the dead column's unrelated bytes.
-        if from_snapshot == self.snapshot_id:
-            from_manifest = self.manifest
-        else:
-            from_manifest = json.loads(
-                self._fs.read_text(os.path.join(self.root, _META, f"v{from_snapshot}.json"))
-            )
-        from_schema = TableSchema.from_json(
-            from_manifest["schemas"][str(from_manifest["schema_version"])]
-        )
-        from_name_by_id = {c.col_id: c.name for c in from_schema.columns}
-        to_spec_by_name = {c.name: c for c in to_schema.columns}
+        key = self.key
+        cols = _feed_columns(to_schema, key)
+        others = [c.name for c in cols[1:]]
+        to_struct = to_schema.to_struct()
 
-        def _visible(snap: int) -> DataFrame:
-            df = self.read(buckets=dirty, snapshot_id=snap, include_deleted=True)
-            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
-            old_side = snap == from_snapshot and snap != to_snapshot
-            aligned = []
-            for c in cols:
-                src = from_name_by_id.get(to_spec_by_name[c].col_id) if old_side else c
-                aligned.append(
-                    (
-                        F.col(src).cast(cur_struct[c].dataType)
-                        if src is not None and src in df.columns
-                        else F.lit(None).cast(cur_struct[c].dataType)
-                    ).alias(c)
-                )
-            return df.select(*aligned)
+        def _visible(snap: int, schema: TableSchema) -> DataFrame:
+            df = self.read(buckets=dirty, snapshot_id=snap)
+            return df.select(*_aligned(cols, to_struct, schema))
 
-        old = _visible(from_snapshot).select(
+        old = _visible(from_snapshot, _schema_of(from_manifest)).select(
             F.col(key),
             F.lit(True).alias("_o_present"),
-            *[F.col(c).alias(f"_o_{c}") for c in cols if c != key],
+            *[F.col(c).alias(f"_o_{c}") for c in others],
         )
-        new = _visible(to_snapshot).withColumn("_n_present", F.lit(True))
+        new = _visible(to_snapshot, to_schema).withColumn("_n_present", F.lit(True))
         j = new.join(old, key, "full_outer")
         row_changed = None
-        for c in cols:
-            if c == key:
-                continue
+        for c in others:
             neq = ~F.col(c).eqNullSafe(F.col(f"_o_{c}"))
             row_changed = neq if row_changed is None else (row_changed | neq)
         new_absent = F.col("_n_present").isNull()
@@ -1148,31 +1204,20 @@ class LakeTable:
             .when(~old_absent & new_absent, F.lit("delete"))
             .when(F.coalesce(row_changed, F.lit(False)), F.lit("update_post"))
         )
-        out_cols = [
-            F.when(F.col("_change_type") == "delete", F.col(f"_o_{c}"))
-            .otherwise(F.col(c))
-            .alias(c)
-            for c in cols
-            if c != key
-        ]
         typed = j.withColumn("_change_type", change).filter(
             F.col("_change_type").isNotNull()
         )
-        if not include_pre:
-            return typed.select(F.col(key), *out_cols, "_change_type")
-        # single pass: the pre-image rides the same scan/join as the
-        # feed row (update rows inline to a post+pre pair) — a union of
-        # two branches over the join would scan both snapshots and run
-        # the diff TWICE per consumer (review r4 finding #6)
-        post_struct = F.struct(*out_cols, F.col("_change_type").alias("_change_type"))
-        pre_struct = F.struct(
-            *[F.col(f"_o_{c}").alias(c) for c in cols if c != key],
-            F.lit("update_pre").alias("_change_type"),
+        return typed.select(
+            F.col(key),
+            *[
+                F.when(F.col("_change_type") == "delete", F.col(f"_o_{c}"))
+                .otherwise(F.col(c))
+                .alias(c)
+                for c in others
+            ],
+            F.struct(*[F.col(f"_o_{c}").alias(c) for c in others]).alias("_pre"),
+            "_change_type",
         )
-        rows = F.when(
-            F.col("_change_type") == "update_post", F.array(post_struct, pre_struct)
-        ).otherwise(F.array(post_struct))
-        return typed.select(F.col(key), F.inline(rows))
 
     def _manifest_at(self, snap: int) -> dict:
         if snap == self.snapshot_id:
@@ -1183,141 +1228,71 @@ class LakeTable:
 
     def _changelog_window(
         self, from_snapshot: int, to_snapshot: int
-    ) -> list[tuple[int, dict]] | None:
-        """The commits in (from, to] that carry changelog files, or
-        ``None`` if any in-window commit changed rows without one
-        (the fast path would silently miss its changes)."""
-        out: list[tuple[int, dict]] = []
-        for snap in range(from_snapshot + 1, to_snapshot + 1):
-            m = self._manifest_at(snap)
-            rc = _row_change_of(m)
-            if rc == "unknown":
+    ) -> list[_Commit] | None:
+        """The commits in (from, to] that carry feed files, or ``None``
+        if any in-window commit changed rows without one (the fast path
+        would silently miss its changes)."""
+        out: list[_Commit] = []
+        for c in _window_commits(self._manifest_at, from_snapshot, to_snapshot):
+            if c.row_change == "unknown":
                 return None
-            if rc == "log" and (
-                _changelog_paths(m) or (m.get("summary") or {}).get("changelog_from_data")
-            ):
-                out.append((snap, m))
+            if c.row_change == "log" and c.files:
+                out.append(c)
         return out
 
-    def _changes_from_log(
-        self, window: list[tuple[int, dict]], to_schema: TableSchema, include_pre: bool
-    ) -> DataFrame:
-        """read_changes served from write-time changelog files.
+    def _changes_from_log(self, window: list[_Commit], to_schema: TableSchema) -> DataFrame:
+        """The change window served from write-time changelog files.
 
         One bounded parquet read per in-window commit (O(churn), no
         table scan), each aligned to the to-snapshot schema by COLUMN
-        ID; multi-commit windows NET-merge per key (one groupBy keyed
+        ID. A one-commit window is that scan as-is (no groupBy, no
+        exchange). Longer windows NET-merge per key (one groupBy keyed
         like the MERGE): a key's first in-window change supplies the
         pre-image (= its state at from_snapshot), its last supplies the
         post-image, and insert→…→delete / update-back-to-same-value
         chains cancel — byte-equivalent to the join path's
         from-vs-to-state diff (tested for parity).
         """
-        from pyspark.sql import types as T
-
-        key = self.key
-        cols = [c for c in to_schema.names() if c != "_deleted"]
-        others = [c for c in cols if c != key]
-        cur_struct = to_schema.to_struct()
         if not window:
-            empty_schema = T.StructType(
-                [T.StructField(c, cur_struct[c].dataType) for c in cols]
-                + [T.StructField("_change_type", T.StringType())]
-            )
-            return self.spark.createDataFrame([], empty_schema)
-
-        to_id_by_name = {c.name: c.col_id for c in to_schema.columns}
-        key_id = to_id_by_name[key]
+            return self._empty_window(to_schema)
+        key = self.key
+        cols = _feed_columns(to_schema, key)
+        others = [c.name for c in cols[1:]]
+        to_struct = to_schema.to_struct()
         frames: list[DataFrame] = []
-        for snap, m in window:
-            sv = (m.get("summary") or {}).get(
-                "changelog_schema_version", m["schema_version"]
-            )
-            snap_schema = TableSchema.from_json(m["schemas"][str(sv)])
-            snap_struct = snap_schema.to_struct()
-            name_by_id = {c.col_id: c.name for c in snap_schema.columns}
-            snap_key = name_by_id[key_id]
-            snap_cols = [c for c in snap_schema.names() if c != "_deleted"]
-            snap_others = [c for c in snap_cols if c != snap_key]
-            read_schema = T.StructType(
-                [T.StructField(c, snap_struct[c].dataType) for c in snap_cols]
-                + [
-                    T.StructField(
-                        "_pre",
-                        T.StructType(
-                            [
-                                T.StructField(c, snap_struct[c].dataType)
-                                for c in snap_others
-                            ]
-                        ),
-                    ),
-                    T.StructField("_change_type", T.StringType()),
-                ]
-            )
-            from_data = (m.get("summary") or {}).get("changelog_from_data")
-            if from_data:
-                # insert-only commit (append feed='insert'): the feed is
-                # the commit's own data files — every row an insert with
-                # no pre-image. No changelog bytes were ever written.
-                data_schema = T.StructType(
-                    [T.StructField(c, snap_struct[c].dataType) for c in snap_cols]
-                )
-                pre_t = T.StructType(
-                    [T.StructField(c, snap_struct[c].dataType) for c in snap_others]
-                )
+        for c in window:
+            shape = _window_struct(c.schema, c.schema.names_of([cols[0].col_id])[0])
+            paths = [os.path.join(self.root, p) for p in c.files]
+            if c.insert_only:
+                # append(feed='insert'): the feed is the commit's own data
+                # files — every row an insert with no pre-image. No
+                # changelog bytes were ever written.
                 df = (
-                    self.spark.read.schema(data_schema)
-                    .parquet(*[os.path.join(self.root, p) for p in from_data])
+                    self.spark.read.schema(T.StructType(shape.fields[:-2]))
+                    .parquet(*paths)
                     .select(
-                        *snap_cols,
-                        F.lit(None).cast(pre_t).alias("_pre"),
+                        "*",
+                        F.lit(None).cast(shape["_pre"].dataType).alias("_pre"),
                         F.lit("insert").alias("_change_type"),
                     )
                 )
             else:
-                paths = [os.path.join(self.root, p) for p in _changelog_paths(m)]
-                df = self.spark.read.schema(read_schema).parquet(*paths)
-
-            def _post(c: str):
-                src = name_by_id.get(to_id_by_name[c])
-                if src is None or src not in snap_cols:
-                    return F.lit(None).cast(cur_struct[c].dataType)
-                return F.col(src).cast(cur_struct[c].dataType)
-
-            def _pre(c: str):
-                src = name_by_id.get(to_id_by_name[c])
-                if src is None or src not in snap_others:
-                    return F.lit(None).cast(cur_struct[c].dataType)
-                return F.col("_pre").getField(src).cast(cur_struct[c].dataType)
-
+                df = self.spark.read.schema(shape).parquet(*paths)
             frames.append(
                 df.select(
-                    _post(key).alias(key),
-                    *[_post(c).alias(c) for c in others],
-                    F.struct(*[_pre(c).alias(c) for c in others]).alias("_pre"),
-                    F.col("_change_type"),
-                    F.lit(snap).cast("long").alias("_cl_snap"),
+                    *_aligned(cols, to_struct, c.schema),
+                    F.struct(
+                        *_aligned(cols[1:], to_struct, c.schema, F.col("_pre").getField)
+                    ).alias("_pre"),
+                    "_change_type",
+                    F.lit(c.snap).cast("long").alias("_cl_snap"),
                 )
             )
         u = frames[0]
         for fdf in frames[1:]:
             u = u.unionByName(fdf)
-
         if len(frames) == 1:
-            if not include_pre:
-                return u.select(F.col(key), *[F.col(c) for c in others], "_change_type")
-            post_struct = F.struct(
-                *[F.col(c).alias(c) for c in others],
-                F.col("_change_type").alias("_change_type"),
-            )
-            pre_struct = F.struct(
-                *[F.col("_pre").getField(c).alias(c) for c in others],
-                F.lit("update_pre").alias("_change_type"),
-            )
-            rows = F.when(
-                F.col("_change_type") == "update_post", F.array(post_struct, pre_struct)
-            ).otherwise(F.array(post_struct))
-            return u.select(F.col(key), F.inline(rows))
+            return u.drop("_cl_snap")
 
         packed = F.struct(
             *[F.col(c).alias(c) for c in others],
@@ -1357,25 +1332,17 @@ class LakeTable:
         typed = g.withColumn("_change_type", net).filter(
             F.col("_change_type").isNotNull()
         )
-        out_cols = [
-            F.when(F.col("_change_type") == "delete", first_pre(c))
-            .otherwise(last.getField(c))
-            .alias(c)
-            for c in others
-        ]
-        if not include_pre:
-            return typed.select(F.col(key), *out_cols, "_change_type")
-        post_struct = F.struct(
-            *out_cols, F.col("_change_type").alias("_change_type")
+        return typed.select(
+            F.col(key),
+            *[
+                F.when(F.col("_change_type") == "delete", first_pre(c))
+                .otherwise(last.getField(c))
+                .alias(c)
+                for c in others
+            ],
+            F.struct(*[first_pre(c).alias(c) for c in others]).alias("_pre"),
+            "_change_type",
         )
-        pre_struct = F.struct(
-            *[first_pre(c).alias(c) for c in others],
-            F.lit("update_pre").alias("_change_type"),
-        )
-        rows = F.when(
-            F.col("_change_type") == "update_post", F.array(post_struct, pre_struct)
-        ).otherwise(F.array(post_struct))
-        return typed.select(F.col(key), F.inline(rows))
 
     # ----------------------------------------------------------------- write
 
@@ -3392,56 +3359,31 @@ class LakeTable:
         )
         if self.is_committed(bid) or snapshot_id == self.snapshot_id:
             return self
-        old = json.loads(
-            self._fs.read_text(os.path.join(self.root, _META, f"v{snapshot_id}.json"))
-        )
+        old = self._manifest_at(snapshot_id)
         snap_id = self.snapshot_id + 1
         summary: dict = {"rollback_to": snapshot_id}
         if (
             self.manifest.get("changelog")
             and old["schema_version"] == self.manifest["schema_version"]
         ):
-            from pyspark.sql import types as T
-
-            cur = self.schema
-            cur_struct = cur.to_struct()
-            key = self.key
-            cl_cols = [c for c in cur.names() if c not in (key, "_deleted")]
-            pre_type = T.StructType(
-                [T.StructField(c, cur_struct[c].dataType) for c in cl_cols]
-            )
-            feed = self.read_changes(snapshot_id, self.snapshot_id, include_pre=True)
-            posts = feed.filter(F.col("_change_type") != "update_pre")
-            pres = feed.filter(F.col("_change_type") == "update_pre").select(
-                F.col(key),
-                F.struct(*[F.col(c).alias(c) for c in cl_cols]).alias("_oldvals"),
-            )
-            j = posts.join(pres, key, "left")
-            inv_ct = (
-                F.when(F.col("_change_type") == "insert", F.lit("delete"))
-                .when(F.col("_change_type") == "delete", F.lit("insert"))
-                .otherwise(F.lit("update_post"))
-            )
-            is_upd = F.col("_change_type") == "update_post"
-            cl_df = j.select(
-                F.col(key),
-                # compensating post-image: the TARGET's values — for an
-                # undone update that is the pre-image row; insert/delete
-                # rows already carry the right side (delete rows hold
-                # the pre-image, which IS the restored row; undone
-                # inserts carry the values being deleted)
+            win = self._change_window(snapshot_id, self.snapshot_id)
+            others = [c for c in win.columns if c not in (self.key, "_pre", "_change_type")]
+            ct = F.col("_change_type")
+            is_upd = ct == "update_post"
+            # the inverse net diff: an undone insert deletes the row it
+            # carries, an undone delete re-inserts its old image, and an
+            # undone update swaps post and pre
+            cl_df = win.select(
+                self.key,
                 *[
-                    F.when(is_upd, F.col("_oldvals").getField(c))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in cl_cols
+                    F.when(is_upd, F.col("_pre").getField(c)).otherwise(F.col(c)).alias(c)
+                    for c in others
                 ],
-                F.when(
-                    is_upd, F.struct(*[F.col(c).alias(c) for c in cl_cols])
-                )
-                .otherwise(F.lit(None).cast(pre_type))
-                .alias("_pre"),
-                inv_ct.alias("_change_type"),
+                F.when(is_upd, F.struct(*others)).alias("_pre"),
+                F.when(ct == "insert", F.lit("delete"))
+                .when(ct == "delete", F.lit("insert"))
+                .otherwise(ct)
+                .alias("_change_type"),
             )
             summary = {
                 **summary,

@@ -56,8 +56,11 @@ Options:
   a guessed anchor could rewind a restarted stream's offsets (replay).
 
 Output schema: the table schema at stream start (minus ``_deleted``)
-plus ``_change_type`` and ``_commit_snapshot``. Changelog files written
-under older schemas align by COLUMN ID, exactly like ``read_changes``.
+plus ``_change_type`` and ``_commit_snapshot``. Planning walks the
+window with the table's own commit walk (``lake/table.py:
+_window_commits``) and aligns changelog files written under older
+schemas with its column-id rule (``TableSchema.names_of``), so the
+stream and ``read_changes`` cannot disagree on either.
 """
 
 from __future__ import annotations
@@ -68,8 +71,7 @@ import os
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from dbp_etl_spark.lake.schema import TableSchema
-from dbp_etl_spark.lake.table import _changelog_paths, _row_change_of
+from dbp_etl_spark.lake.table import _feed_columns, _schema_of, _window_commits
 
 _META = "_meta"
 
@@ -105,22 +107,21 @@ def _manifest(root: str, snap: int) -> dict:
 
 class _ChangelogFilePartition(InputPartition):
     """One changelog parquet file + its column alignment to the stream
-    schema: ``post_srcs``/``pre_srcs`` map each output column to the
-    file's column name for the same column id (None => NULL-fill)."""
+    schema: ``srcs`` maps each output column to the file's column name
+    for the same column id (None => NULL-fill), for the post-image
+    columns and the ``_pre`` struct's fields alike."""
 
     def __init__(
         self,
         path: str,
         snapshot: int,
-        post_srcs,
-        pre_srcs,
+        srcs,
         include_pre: bool,
         insert_only: bool = False,
     ):
         self.path = path
         self.snapshot = snapshot
-        self.post_srcs = post_srcs  # list[(out_name, src_name|None)]
-        self.pre_srcs = pre_srcs  # list[(out_name, src_name|None)], key pre = key
+        self.srcs = srcs  # list[(out_name, src_name|None)], key first
         self.include_pre = include_pre
         # insert_only: the "file" is a DATA file of an append(feed=
         # 'insert') commit — no _change_type/_pre columns on disk;
@@ -180,38 +181,28 @@ class _CDFStreamReader(DataSourceStreamReader):
         # the checkpointed offset after a restart
         self._last_end = max(self._last_end or 0, lo, hi)
         out = []
-        for snap in range(lo + 1, hi + 1):
-            m = _manifest(self.root, snap)
-            rc = _row_change_of(m)
-            if rc == "none":
+        names = [name for name, _cid, _dt in self.schema_cols]
+        ids = [cid for _name, cid, _dt in self.schema_cols]
+        for c in _window_commits(lambda s: _manifest(self.root, s), lo, hi):
+            if c.row_change == "none":
                 continue
-            if rc != "log":
+            if c.row_change != "log":
                 if self.on_missing == "skip":
                     continue
                 raise ValueError(
-                    f"snapshot {snap} changed rows without a changelog "
-                    f"(summary: {sorted((m.get('summary') or {}))}); pass "
+                    f"snapshot {c.snap} changed rows without a changelog "
+                    f"(summary: {sorted(c.summary)}); pass "
                     ".option('onMissingChangelog','skip') to ignore such commits"
                 )
-            sv = (m.get("summary") or {}).get(
-                "changelog_schema_version", m["schema_version"]
-            )
-            snap_schema = TableSchema.from_json(m["schemas"][str(sv)])
-            name_by_id = {c.col_id: c.name for c in snap_schema.columns}
-            post_srcs = [
-                (name, name_by_id.get(cid)) for name, cid, _dt in self.schema_cols
-            ]
-            pre_srcs = post_srcs  # same id mapping; key handled in read()
-            from_data = (m.get("summary") or {}).get("changelog_from_data")
-            for rel in from_data or _changelog_paths(m):
+            srcs = list(zip(names, c.schema.names_of(ids)))
+            for rel in c.files:
                 out.append(
                     _ChangelogFilePartition(
                         os.path.join(self.root, rel),
-                        snap,
-                        post_srcs,
-                        pre_srcs,
+                        c.snap,
+                        srcs,
                         self.include_pre,
-                        insert_only=bool(from_data),
+                        insert_only=c.insert_only,
                     )
                 )
         return out
@@ -227,7 +218,7 @@ class _CDFStreamReader(DataSourceStreamReader):
         # _pre struct duplicating the full row — skip decoding it (and
         # any column dropped since) unless the stream asked for it
         file_names = set(pq.read_schema(partition.path).names)
-        wanted = {src for _name, src in partition.post_srcs if src}
+        wanted = {src for _name, src in partition.srcs if src}
         if not partition.insert_only:
             wanted.add("_change_type")
             if partition.include_pre:
@@ -247,13 +238,13 @@ class _CDFStreamReader(DataSourceStreamReader):
             return pc.cast(arr, at) if arr.type != at else arr
 
         key_name = self.schema_cols[0][0]
-        post = [col(src, name) for name, src in partition.post_srcs]
+        post = [col(src, name) for name, src in partition.srcs]
         if partition.insert_only:
             ct = pa.array(["insert"] * n, type=pa.string())
         else:
             ct = pc.cast(tbl["_change_type"], pa.string())
         snap_arr = pa.array([partition.snapshot] * n, type=pa.int64())
-        out_names = [name for name, _src in partition.post_srcs] + [
+        out_names = [name for name, _src in partition.srcs] + [
             "_change_type",
             "_commit_snapshot",
         ]
@@ -273,14 +264,14 @@ class _CDFStreamReader(DataSourceStreamReader):
         def pre_col(src, name):
             at = atypes[name]
             if name == key_name:
-                arr = upd[partition.post_srcs[0][1]] if partition.post_srcs[0][1] in upd.schema.names else None
+                arr = upd[partition.srcs[0][1]] if partition.srcs[0][1] in upd.schema.names else None
                 return pc.cast(arr, at) if arr is not None else pa.nulls(m_rows, at)
             if src is None or src not in pre_fields:
                 return pa.nulls(m_rows, at)
             arr = pre_struct.field(src)
             return pc.cast(arr, at) if arr.type != at else arr
 
-        pre = [pre_col(src, name) for name, src in partition.pre_srcs]
+        pre = [pre_col(src, name) for name, src in partition.srcs]
         yield pa.RecordBatch.from_arrays(
             [_as_array(a) for a in pre]
             + [
@@ -310,12 +301,12 @@ def _stream_columns(manifest: dict):
     """(name, col_id, spark_type) for the stream's output columns —
     the table schema at stream start minus the tombstone flag, KEY
     FIRST (matching read_changes' column order)."""
-    schema = TableSchema.from_json(manifest["schemas"][str(manifest["schema_version"])])
-    key = manifest["key"]
-    cols = [c for c in schema.columns if c.name != "_deleted"]
-    cols.sort(key=lambda c: c.name != key)  # stable: key first, rest in order
+    schema = _schema_of(manifest)
     struct = schema.to_struct()
-    return [(c.name, c.col_id, struct[c.name].dataType) for c in cols]
+    return [
+        (c.name, c.col_id, struct[c.name].dataType)
+        for c in _feed_columns(schema, manifest["key"])
+    ]
 
 
 class LakeCDFDataSource(DataSource):

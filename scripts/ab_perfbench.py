@@ -4,10 +4,12 @@
         [--workloads backfill_trickle,query_suite] [--seeds 42,7]
         [--seconds 10] [--workdir DIR] [--out runs.json]
 
-Exports ``<rev>`` with ``git archive`` into ``--workdir`` (reused when it
-already holds that commit; no ``git worktree`` metadata is added to the
-repository), then runs ``perfbench/run.py`` in the base copy and in the
-working tree for each pair, one process at a time. The side that runs
+Exports ``<rev>`` with ``git archive`` into ``--workdir/base`` (reused when
+it already holds that commit; no ``git worktree`` metadata is added to the
+repository) and copies the working tree's tracked and untracked-but-not-ignored
+files into a fresh ``--workdir/change`` on every invocation, so both sides run
+from sibling copies of the same shape. It then runs ``perfbench/run.py`` in
+the two copies for each pair, one process at a time. The side that runs
 first alternates from pair to pair, and pair ``i`` uses seed
 ``seeds[i % len(seeds)]`` on both sides, so host drift hits both sides
 alike.
@@ -34,6 +36,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -64,6 +67,21 @@ def export_base(rev: str, dest: str) -> str:
     with open(marker, "w") as f:
         f.write(sha)
     return sha
+
+
+def copy_change(dest: str) -> None:
+    """Copy the working tree's tracked and unignored files into a fresh ``dest``."""
+    files = subprocess.run(
+        ["git", "-C", ROOT, "ls-files", "-z", "-co", "--exclude-standard"],
+        check=True, capture_output=True, text=True,
+    ).stdout.split("\0")
+    shutil.rmtree(dest, ignore_errors=True)
+    for rel in files:
+        src = os.path.join(ROOT, rel)
+        if not rel or not os.path.isfile(src):  # deleted but still in the index
+            continue
+        os.makedirs(os.path.dirname(os.path.join(dest, rel)), exist_ok=True)
+        shutil.copy2(src, os.path.join(dest, rel))
 
 
 def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
@@ -147,7 +165,7 @@ def main(argv=None) -> int:
     ap.add_argument("--seeds", default="42,7", help="comma-separated; pair i uses seed i mod n")
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--workdir", default=os.path.join(tempfile.gettempdir(), "ab_perfbench"),
-                    help="where the base revision is exported")
+                    help="where the base revision is exported and the working tree copied")
     ap.add_argument("--out", help="write every run's JSON here")
     args = ap.parse_args(argv)
 
@@ -155,8 +173,11 @@ def main(argv=None) -> int:
         spec = json.load(f)["end_to_end"]
     seeds = [int(s) for s in args.seeds.split(",")]
     base_tree = os.path.join(args.workdir, "base")
+    change_tree = os.path.join(args.workdir, "change")
     sha = export_base(args.base, base_tree)
-    print(f"base {sha[:12]} at {base_tree}; change = working tree at {ROOT}", flush=True)
+    copy_change(change_tree)
+    print(f"base {sha[:12]} at {base_tree}; change = working tree of {ROOT} "
+          f"copied to {change_tree}", flush=True)
 
     all_runs: dict[str, list[dict]] = {}
     for workload in args.workloads.split(","):
@@ -166,7 +187,7 @@ def main(argv=None) -> int:
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             pair = {"pair": i, "seed": seed, "first": order[0]}
             for side in order:
-                tree = base_tree if side == "base" else ROOT
+                tree = base_tree if side == "base" else change_tree
                 pair[side] = run_once(tree, workload, seed, args.seconds)
             runs.append(pair)
             print(f"{workload} pair {i} seed {seed} first {order[0]} done", flush=True)

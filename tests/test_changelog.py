@@ -104,6 +104,19 @@ def test_single_commit_window_parity(spark, tmp_path):
     assert t.manifest["summary"]["changelog_files"]
 
 
+def test_one_commit_changelog_window_has_no_exchange(spark, tmp_path):
+    """A one-commit window (what a trickle replica sync reads) is the
+    commit's changelog scan as-is: no groupBy, so no shuffle."""
+    t = mk_table(spark, tmp_path)
+    s0 = t.snapshot_id
+    merge_batch(t, ev(spark, [("u1", 100, b"<p>a</p>", "insert")]), "b1")
+    t = t.refresh()
+    for include_pre in (False, True):
+        feed = t.read_changes(s0, include_pre=include_pre, use_changelog=True)
+        plan = feed._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+
+
 def test_multi_commit_net_merge_parity(spark, tmp_path):
     """Windows spanning several commits NET-merge per key: chains
     cancel (insert→delete), collapse (insert→update ⇒ insert with final
@@ -281,9 +294,13 @@ def test_state_preserving_commits_skipped(spark, tmp_path):
     t = t.refresh()
     t = t.compact("squash")
     t = t.tag_snapshot("audited")
+    s2 = t.snapshot_id
     t = t.add_column("notes", "string")
     feed = assert_parity(t, s1, include_pre=True)
     assert {r["_change_type"] for r in feed.collect()} == {"update_post", "update_pre"}
+    # a window with no file changes, read after a later column add: both
+    # paths return the to-snapshot's columns, not the head's
+    assert_parity(t, s2 - 1, s2)
 
 
 def test_empty_and_noop_batches(spark, tmp_path):
@@ -421,32 +438,44 @@ def test_changelog_replay_is_idempotent(spark, tmp_path):
     assert norm(t.read_changes(s1, use_changelog=True)) == before
 
 
-def test_rollback_emits_compensating_changes(spark, tmp_path):
+@pytest.mark.parametrize("span", ["one_commit", "two_commits"])
+def test_rollback_emits_compensating_changes(spark, tmp_path, span):
     """rollback_to on a changelog table writes the INVERSE of the
     undone window as its changelog: feeds and streams ride through the
-    rollback, and a window spanning bad-batch+rollback nets to zero."""
+    rollback, and a window spanning bad-batch+rollback nets to zero.
+    Undoing two commits (an insert→update chain on u3, an update→delete
+    chain on u1) inverts the multi-commit net merge instead."""
     t = mk_table(spark, tmp_path)
     merge_batch(t, ev(spark, [("u1", 100, b"<p>a</p>", "insert"),
                               ("u2", 100, b"<p>b</p>", "insert")]), "b1")
     t = t.refresh()
     s1 = t.snapshot_id
-    merge_batch(t, ev(spark, [("u1", 200, b"<p>a2</p>", "update"),
-                              ("u2", 200, None, "delete"),
-                              ("u3", 200, b"<p>c</p>", "insert")]), "bad")
-    t = t.refresh()
+    bad = [[("u1", 200, b"<p>a2</p>", "update"),
+            ("u2", 200, None, "delete"),
+            ("u3", 200, b"<p>c</p>", "insert")]]
+    if span == "two_commits":
+        bad.append([("u1", 300, None, "delete"),
+                    ("u3", 300, b"<p>c2</p>", "update")])
+    for i, rows in enumerate(bad):
+        merge_batch(t, ev(spark, rows), f"bad{i}")
+        t = t.refresh()
     s2 = t.snapshot_id
     t = t.rollback_to(s1)
 
-    # the rollback commit alone = inverse of the bad batch (both paths)
+    # the rollback commit alone = inverse of the bad batches (both paths)
     feed = assert_parity(t, s2, include_pre=True)
-    got = {(r["url"], r["_change_type"]) for r in feed.collect()}
-    assert got == {
-        ("u1", "update_post"), ("u1", "update_pre"),
-        ("u2", "insert"), ("u3", "delete"),
-    }
     rows = {(r["url"], r["_change_type"]): r for r in feed.collect()}
-    assert bytes(rows[("u1", "update_post")]["html"]) == b"<p>a</p>"  # restored
-    assert bytes(rows[("u1", "update_pre")]["html"]) == b"<p>a2</p>"  # undone
+    if span == "one_commit":
+        assert set(rows) == {
+            ("u1", "update_post"), ("u1", "update_pre"),
+            ("u2", "insert"), ("u3", "delete"),
+        }
+        assert bytes(rows[("u1", "update_post")]["html"]) == b"<p>a</p>"  # restored
+        assert bytes(rows[("u1", "update_pre")]["html"]) == b"<p>a2</p>"  # undone
+    else:
+        assert set(rows) == {("u1", "insert"), ("u2", "insert"), ("u3", "delete")}
+        assert bytes(rows[("u1", "insert")]["html"]) == b"<p>a</p>"  # restored
+        assert bytes(rows[("u3", "delete")]["html"]) == b"<p>c2</p>"  # last undone value
     assert bytes(rows[("u2", "insert")]["html"]) == b"<p>b</p>"
 
     # bad batch + its rollback cancel over the spanning window
