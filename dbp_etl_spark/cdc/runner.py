@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from dbp_etl_spark.cdc.merge import MergeResult, default_transform, merge_batch
 from dbp_etl_spark.lake.table import LakeTable
+from dbp_etl_spark.session import local_frame
 
 
 class DriftError(RuntimeError):
@@ -447,8 +448,8 @@ class CDCRunner:
                 )
                 for line in res.lineage
             ]
-            spark.createDataFrame(
-                rows, "batch_id string, partition_id int, action string, n long"
+            local_frame(
+                spark, rows, "batch_id string, partition_id int, action string, n long"
             ).write.mode("overwrite").parquet(self._side_dir(self.lineage_path, label))
 
     # -- checkpoint/resume introspection -------------------------------

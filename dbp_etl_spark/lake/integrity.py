@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbp_etl_spark.session import local_frame
+
 MUTATING_ACTIONS = ("insert", "update", "delete", "patch")
 
 
@@ -98,9 +100,7 @@ def state_checks(table, lineage: DataFrame | None = None) -> DataFrame:
                 if a in MUTATING_ACTIONS
             )
         spark = table.spark
-        exp = spark.createDataFrame(
-            exp_rows, "batch_id string, action string, expected long"
-        )
+        exp = local_frame(spark, exp_rows, "batch_id string, action string, expected long")
         act = (
             lineage.filter(F.col("action").isin(*MUTATING_ACTIONS))
             .groupBy("batch_id", "action")

@@ -63,6 +63,7 @@ from dbp_etl_spark.lake.stats import (
     file_must_match,
     validate_predicates,
 )
+from dbp_etl_spark.session import local_frame
 
 # column types with a usable total order for manifest file bounds
 _STATS_TYPES = {"string", "timestamp", "long", "int", "double", "float", "boolean", "date"}
@@ -440,7 +441,7 @@ class LakeTable:
             )
         from pyspark.sql.types import BooleanType
 
-        probe = spark.createDataFrame([], schema.to_struct())
+        probe = local_frame(spark, [], schema.to_struct())
         try:
             dt = probe.select(F.expr(expr).alias("c")).schema["c"].dataType
         except Exception as e:  # noqa: BLE001 — surface parse/resolution errors
@@ -769,7 +770,7 @@ class LakeTable:
 
         cur_struct = current.to_struct()
         if not files:
-            empty = self.spark.createDataFrame([], cur_struct)
+            empty = local_frame(self.spark, [], cur_struct)
             if not include_deleted and "_deleted" in empty.columns:
                 empty = empty.drop("_deleted")
             return empty
@@ -777,7 +778,7 @@ class LakeTable:
         if read_optimized:
             files = [f for f in files if not f.get("delta")]
             if not files:
-                empty = self.spark.createDataFrame([], cur_struct)
+                empty = local_frame(self.spark, [], cur_struct)
                 if not include_deleted and "_deleted" in empty.columns:
                     empty = empty.drop("_deleted")
                 return empty
@@ -1152,7 +1153,7 @@ class LakeTable:
         return self._changes_from_join(from_snapshot, to_snapshot, to_schema)
 
     def _empty_window(self, to_schema: TableSchema) -> DataFrame:
-        return self.spark.createDataFrame([], _window_struct(to_schema, self.key))
+        return local_frame(self.spark, [], _window_struct(to_schema, self.key))
 
     def _changes_from_join(
         self, from_snapshot: int, to_snapshot: int, to_schema: TableSchema
@@ -3473,7 +3474,8 @@ class LakeTable:
                     "kbloom" in f,
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "path string, bucket int, schema_version int, is_delta boolean, "
             "delta_seq int, size_bytes long, n_rows long, has_kbloom boolean",
@@ -3514,7 +3516,8 @@ class LakeTable:
                     op,
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "snapshot_id long, parent_id long, schema_version int, "
             "n_files long, operation string",

@@ -29,6 +29,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbp_etl_spark.session import local_frame
+
 
 def rollup_delta(changes: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """Per-group (d_n, d_sum) contribution of a change feed.
@@ -82,7 +84,7 @@ class IncrementalRollup:
             schema = ", ".join(
                 [f"{c} string" for c in self.group_cols] + ["n long", "total double"]
             )
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return spark.read.parquet(self._state_path(snap))
 
     # -- maintenance ----------------------------------------------------

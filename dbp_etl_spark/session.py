@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -54,3 +55,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-side rows whose scans stay in the JVM.
+
+    ``spark.createDataFrame(list)`` parallelizes pickled rows, so every
+    job that scans the frame (a count, a join side, a write) runs one
+    Python task per partition, each paying the Python worker round trip
+    even for two rows or none. Here the rows travel once as an Arrow
+    table and an empty frame has no partitions at all. ``rows`` are
+    tuples in schema order, or Rows or dicts by name; naive datetimes in
+    top-level timestamp columns are local time, as in createDataFrame.
+    """
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    if not rows:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), struct)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = struct.names
+    local_ts = [f.name for f in struct.fields if isinstance(f.dataType, TimestampType)]
+    dicts = []
+    for r in rows:
+        if isinstance(r, Row):
+            r = r.asDict()
+        d = dict(r) if isinstance(r, dict) else dict(zip(names, r))
+        for c in local_ts:
+            if d.get(c) is not None and d[c].tzinfo is None:
+                d[c] = d[c].astimezone()
+        dicts.append(d)
+    table = pa.Table.from_pylist(dicts, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)

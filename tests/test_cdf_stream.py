@@ -8,6 +8,7 @@ from pyspark.sql import types as T
 from dbp_etl_spark.cdc import merge_batch
 from dbp_etl_spark.lake import LakeTable, TableSchema
 from dbp_etl_spark.streaming.cdf_source import read_change_stream
+from dbp_etl_spark.session import local_frame
 
 PAGES = T.StructType(
     [
@@ -28,7 +29,8 @@ def mk_table(spark, tmp_path, **kw):
 
 
 def ev(spark, rows):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "url string, ts long, html binary, op string"
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op")
 
@@ -168,7 +170,8 @@ def test_stream_schema_evolution_alignment(spark, tmp_path):
     t = mk_table(spark, tmp_path)
     merge_batch(t, ev(spark, [("u1", 100, b"<p>a</p>", "insert")]), "b1")
     t = t.refresh()
-    batch2 = spark.createDataFrame(
+    batch2 = local_frame(
+        spark,
         [("u2", 200, b"<p>b</p>", "insert", 7)],
         "url string, ts long, html binary, op string, rank long",
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op", "rank")
@@ -376,7 +379,8 @@ def test_replicate_stream_filtered(spark, tmp_path):
 
 
 def seed_rows(spark, urls, ts=100):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(u, ts, f"<p>{u}</p>".encode(), f"text {u}", "en") for u in urls],
         "url string, ts long, html binary, text string, lang string",
     ).select(

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from dbp_etl_spark.cdc import merge_batch, snapshot_batch
 from dbp_etl_spark.lake import LakeTable, TableSchema
+from dbp_etl_spark.session import local_frame
 
 PAGES = T.StructType(
     [
@@ -40,7 +41,7 @@ def ev(spark, rows, extra_schema=""):
     """rows: (url, ts_sec, html_bytes|None, op[, extras...])"""
     schema = "url string, ts long, html binary, op string" + extra_schema
     extras = [c.strip().split(" ")[0] for c in extra_schema.split(",") if c.strip()]
-    return spark.createDataFrame(rows, schema).select(
+    return local_frame(spark, rows, schema).select(
         "url",
         F.timestamp_seconds("ts").alias("warc_ts"),
         "html",
@@ -347,7 +348,8 @@ def test_snapshot_compare_changelog_parity(spark, tmp_path):
                               ("u2", 100, b"<p>b</p>", "insert")]), "b1")
     t = t.refresh()
     s1 = t.snapshot_id
-    snap = spark.createDataFrame(
+    snap = local_frame(
+        spark,
         [("u1", 200, b"<p>a2</p>"), ("u3", 200, b"<p>c</p>")],
         "url string, ts long, html binary",
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html")

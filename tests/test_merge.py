@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 from dbp_etl_spark.cdc import CDCRunner, generate_changes, merge_batch
 from dbp_etl_spark.functions.extract import extract_text_py
 from dbp_etl_spark.lake import LakeTable, TableSchema
+from dbp_etl_spark.session import local_frame
 
 PAGES = T.StructType(
     [
@@ -34,7 +35,8 @@ def mk_table(spark, tmp_path, name="pages", buckets=8):
 
 def ev(spark, rows):
     """rows: (url, ts_sec, html_bytes|None, op)"""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "url string, ts long, html binary, op string"
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op")
 
@@ -471,7 +473,8 @@ def test_fused_equal_ts_extra_column_tie_matches_per_batch(spark, tmp_path):
         ("u1", 100, b"<p>same</p>", "insert", "author_b", 1),
         ("u2", 100, b"<p>x</p>", "insert", "author_c", 0),
     ]
-    ev2 = spark.createDataFrame(
+    ev2 = local_frame(
+        spark,
         rows, "url string, ts long, html binary, op string, author string, batch_id long"
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op", "author", "batch_id")
 
@@ -517,7 +520,8 @@ def test_payload_only_table_merges_without_text_lang(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "slim"), TableSchema.from_struct(slim), key="url", num_buckets=4
     )
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [
             ("u1", datetime.fromtimestamp(100, tz=timezone.utc), b"<p>x</p>", "update", 0),
             ("u1", datetime.fromtimestamp(200, tz=timezone.utc), b"<p>y</p>", "update", 1),

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from dbp_etl_spark.cdc import merge_batch
 from dbp_etl_spark.cdc.merge import snapshot_batch
 from dbp_etl_spark.lake import LakeTable, TableSchema
+from dbp_etl_spark.session import local_frame
 
 PAGES = T.StructType(
     [
@@ -41,7 +42,8 @@ def mk(spark, tmp_path, name, mor, **kw):
 
 
 def ev(spark, rows):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "url string, ts long, html binary, op string"
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op")
 
@@ -177,7 +179,8 @@ def test_mor_snapshot_compare(spark, tmp_path):
     t = mk(spark, tmp_path, "t", mor=True)
     t = apply_all(spark, t, BATCHES[:1])
 
-    snap = spark.createDataFrame(
+    snap = local_frame(
+        spark,
         [("u1", 500, b"<p>one-snap</p>"), ("u2", 100, b"<p>two</p>")],
         "url string, ts long, html binary",
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html")
@@ -286,7 +289,8 @@ def test_mor_patch_ops_parity_with_cow(spark, tmp_path):
     from dbp_etl_spark.cdc import CDCRunner
 
     def pev(rows):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "url string, ts long, html binary, score double, op string, batch_id long"
         ).select(
             "url",
@@ -323,7 +327,7 @@ def test_delete_keys_equality_fast_path(spark, tmp_path):
 
     t = apply_all(spark, mk(spark, tmp_path, "t", mor=True), BATCHES[:1])
     t = t.refresh()
-    keys = spark.createDataFrame([("u2",), ("u3",), ("ghost",)], "url string")
+    keys = local_frame(spark, [("u2",), ("u3",), ("ghost",)], "url string")
     t = t.delete_keys(keys, datetime.datetime(2024, 1, 1), "eqdel-1")
     assert {r["url"] for r in t.read().collect()} == {"u1", "u4"}
     # the commit wrote only tombstone deltas (no base rewrite)
@@ -379,7 +383,8 @@ def test_mor_schema_evolution_lands_as_deltas(spark, tmp_path):
     (null-filled) and new delta files by column id."""
     t = apply_all(spark, mk(spark, tmp_path, "t", mor=True), BATCHES[:1])
     t = t.refresh()
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [("u1", 200, b"<p>one-v2</p>", 7.5, "update"), ("u9", 200, b"<p>nine</p>", 1.0, "insert")],
         "url string, ts long, html binary, rank double, op string",
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "rank", "op")

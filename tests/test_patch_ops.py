@@ -7,13 +7,15 @@ from pyspark.sql import functions as F
 
 from dbp_etl_spark.cdc import CDCRunner, merge_batch
 from dbp_etl_spark.lake import LakeTable, TableSchema
+from dbp_etl_spark.session import local_frame
 
 from test_merge import PAGES, mk_table
 
 
 def pev(spark, rows):
     """rows: (url, ts_sec, html|None, score|None, op, batch)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "url string, ts long, html binary, score double, op string, batch_id long"
     ).select(
         "url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "score", "op", "batch_id"

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from dbp_etl_spark.cdc import CDCRunner
 from dbp_etl_spark.functions.extract import detect_lang_py, extract_text_py
 from dbp_etl_spark.lake import LakeTable, TableSchema
+from dbp_etl_spark.session import local_frame
 
 # ---------------------------------------------------------------- pure python
 
@@ -99,7 +100,8 @@ def test_cdc_split_invariance_fuzzed(spark, tmp_path):
         for pos, (url, ts, payload, op) in enumerate(events):
             b = sum(1 for x in bounds if x <= pos)
             rows.append((url, ts, payload, op, b))
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             rows, "url string, ts long, html binary, op string, batch_id long"
         ).select(
             "url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op", "batch_id"
@@ -149,7 +151,8 @@ def test_retention_invariance_fuzzed(spark, tmp_path):
         for pos, (url, ts, payload, op) in enumerate(events):
             b = sum(1 for x in bounds if x <= pos)
             rows.append((url, ts, payload, op, b))
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             rows, "url string, ts long, html binary, op string, batch_id long"
         ).select(
             "url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op", "batch_id"
@@ -196,7 +199,8 @@ def test_rollback_replay_invariance_fuzzed(spark, tmp_path):
         for pos, (url, ts, payload, op) in enumerate(events):
             b = sum(1 for x in bounds if x <= pos)
             rows.append((url, ts, payload, op, b))
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             rows, "url string, ts long, html binary, op string, batch_id long"
         ).select(
             "url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op", "batch_id"
@@ -250,7 +254,8 @@ def test_scd2_split_invariance_fuzzed(spark, tmp_path):
         def batch_of(ts):
             return sum(1 for c in cuts if ts >= c)
 
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [(u, t_, p, o, batch_of(t_)) for (u, t_, p, o) in events],
             "url string, ts long, html binary, op string, batch_id long",
         ).select(

@@ -8,6 +8,7 @@ from pyspark.sql import types as T
 
 from dbp_etl_spark.cdc.scd import SCD2Runner, scd2_intervals, scd2_schema
 from dbp_etl_spark.lake import LakeTable
+from dbp_etl_spark.session import local_frame
 
 
 def ts(s):
@@ -46,7 +47,7 @@ def mk_hist(spark, tmp_path, name="hist"):
 
 
 def log_df(spark, rows=LOG):
-    return spark.createDataFrame(rows, EV_SCHEMA)
+    return local_frame(spark, rows, EV_SCHEMA)
 
 
 def hist_state(table):

@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from dbp_etl_spark.cdc import merge_batch
 from dbp_etl_spark.lake import LakeTable, TableSchema
 from dbp_etl_spark.lake.table import CommitConflict
+from dbp_etl_spark.session import local_frame
 
 PAGES = T.StructType(
     [
@@ -39,7 +40,8 @@ def mk(spark, tmp_path, name, **kw):
 
 
 def ev(spark, rows):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "url string, ts long, html binary, op string"
     ).select("url", F.timestamp_seconds("ts").alias("warc_ts"), "html", "op")
 
