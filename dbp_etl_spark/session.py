@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -65,8 +65,8 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     Python task per partition, each paying the Python worker round trip
     even for two rows or none. Here the rows travel once as an Arrow
     table and an empty frame has no partitions at all. ``rows`` are
-    tuples in schema order, or Rows or dicts by name; naive datetimes in
-    top-level timestamp columns are local time, as in createDataFrame.
+    tuples in schema order; naive datetimes in top-level timestamp
+    columns are local time, as in createDataFrame.
     """
     struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
     if not rows:
@@ -78,9 +78,7 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     local_ts = [f.name for f in struct.fields if isinstance(f.dataType, TimestampType)]
     dicts = []
     for r in rows:
-        if isinstance(r, Row):
-            r = r.asDict()
-        d = dict(r) if isinstance(r, dict) else dict(zip(names, r))
+        d = dict(zip(names, r))
         for c in local_ts:
             if d.get(c) is not None and d[c].tzinfo is None:
                 d[c] = d[c].astimezone()
