@@ -493,8 +493,7 @@ def merge_batch(
     if candidates is not None:
         cand = sorted(int(b) for b in candidates)
     else:
-        cand_rows = valid.select(table.bucket_expr(key).alias("b")).distinct().collect()
-        cand = sorted(r["b"] for r in cand_rows)
+        cand = table.buckets_of(valid, key)
 
     res = MergeResult(batch_id=batch_id, deadletter=dead)
     if not cand:

@@ -77,7 +77,6 @@ class CDCRunner:
         expire_keep_last: int = 8,
         patch_ops: bool = False,
         retry_conflicts: int = 0,
-        compact_every: int | None = None,
         audit=None,
     ):
         self.table = table
@@ -117,16 +116,7 @@ class CDCRunner:
         # group. Exactly-once is unchanged: publish merges the group's
         # batch ids into main's ledger atomically.
         self.audit = audit
-        # ``compact_every=N``: compact after every N applied groups —
-        # the maintenance cadence that keeps merge-on-read deltas (and
-        # copy-on-write small files) bounded on a long tail. compact()
-        # folds delta files into base and is ledger-keyed per head, so
-        # a crash mid-compaction replays as a no-op. On MOR tables this
-        # IS the knob that bounds read-time resolution cost: between
-        # compactions a read merges at most N batches' churn.
-        self.compact_every = compact_every
         self._applied_since_expiry = 0
-        self._applied_since_compact = 0
 
     @staticmethod
     def stage_by_batch(
@@ -340,15 +330,11 @@ class CDCRunner:
         return res
 
     def _maintenance(self, res: MergeResult) -> None:
-        """Post-apply cadences: compaction first (its commit is then
-        covered by the same expiry window), snapshot expiry second."""
+        """Post-apply cadence: snapshot expiry every ``expire_every``
+        applied groups. (Merge-on-read delta accumulation is bounded by
+        the table's own ``max_delta_commits``.)"""
         if res.skipped:
             return
-        if self.compact_every is not None:
-            self._applied_since_compact += 1
-            if self._applied_since_compact >= self.compact_every:
-                self.table.compact(f"auto-compact-{self.table.snapshot_id}")
-                self._applied_since_compact = 0
         if self.expire_every is not None:
             self._applied_since_expiry += 1
             if self._applied_since_expiry >= self.expire_every:

@@ -372,11 +372,7 @@ class SCD2Runner:
         fresh = self._batch_events(batch, payload_cols).drop("_existing")
         entities = fresh.select(F.col("url").alias("_e")).distinct()
         fr_t = self.frontier
-        cand = sorted(
-            r["b"]
-            for r in entities.select(fr_t.bucket_expr("_e").alias("b")).distinct().collect()
-            if r["b"] is not None
-        )
+        cand = fr_t.buckets_of(entities, "_e")
         fr = fr_t.read(buckets=cand).join(
             entities, F.col("url") == entities["_e"], "left_semi"
         ).select(

@@ -49,6 +49,7 @@ import os
 import re
 import time
 import uuid
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -119,6 +120,10 @@ def _changelog_paths(m: dict):
     manifest is retained."""
     return (m.get("summary") or {}).get("changelog_files") or []
 
+
+# summary keys listing a commit's change-feed files: per-snapshot, so
+# they stay out of the commit's ledger entries
+_FEED_FILE_KEYS = ("changelog_files", "changelog_from_data")
 
 # summary keys of commits that provably do not change VISIBLE row state
 # (compaction, layout, metadata, tombstone vacuum). Used to classify a
@@ -500,15 +505,11 @@ class LakeTable:
         bid = batch_id if batch_id is not None else f"add-constraint-{name}-at-{self.snapshot_id}"
         if self.is_committed(bid):
             return self
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["constraints"] = {**cur, name: expr}
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"add_constraint": {name: expr}}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest(
+                {"add_constraint": {name: expr}}, bid, constraints={**cur, name: expr}
+            )
+        )
 
     def drop_constraint(self, name: str, batch_id=None) -> "LakeTable":
         """Remove a CHECK constraint. Unknown names no-op (replay-safe)."""
@@ -520,27 +521,22 @@ class LakeTable:
         bid = batch_id if batch_id is not None else f"drop-constraint-{name}-at-{self.snapshot_id}"
         if self.is_committed(bid):
             return self
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["constraints"] = {k: v for k, v in cur.items() if k != name}
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"drop_constraint": name}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest(
+                {"drop_constraint": name},
+                bid,
+                constraints={k: v for k, v in cur.items() if k != name},
+            )
+        )
 
     def set_stats_columns(self, cols: list[str]) -> "LakeTable":
         """Start recording per-file bounds for ``cols`` on future
         writes (metadata-only commit). Files already written keep no
         bounds and are simply never pruned — conservative by design."""
         ids = self._resolve_stats_cols(self.schema, cols)
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["stats_col_ids"] = ids
-        new_manifest["summary"] = {"stats_columns": list(cols)}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest({"stats_columns": list(cols)}, stats_col_ids=ids)
+        )
 
     @staticmethod
     def _head(fs, root: str) -> tuple[int, dict]:
@@ -711,6 +707,14 @@ class LakeTable:
     def bucket_expr(self, col: str | None = None) -> Column:
         """Deterministic bucket id for a key value (see ``bucket_of``)."""
         return bucket_of(F.col(col or self.key), self.num_buckets)
+
+    def buckets_of(self, df: DataFrame, col: str | None = None) -> list[int]:
+        """Sorted distinct buckets of ``df``'s ``col`` values (default:
+        the key column), NULL dropped — the dirty/candidate-bucket probe
+        of every write path. One job: a map-side-combined distinct over
+        at most ``num_buckets`` values."""
+        rows = df.select(self.bucket_expr(col).alias("b")).distinct().collect()
+        return sorted(r["b"] for r in rows if r["b"] is not None)
 
     # ------------------------------------------------------------------ read
 
@@ -1347,6 +1351,21 @@ class LakeTable:
 
     # ----------------------------------------------------------------- write
 
+    @contextmanager
+    def _micros_timestamps(self):
+        """Write parquet timestamps as TIMESTAMP_MICROS inside the block.
+        INT96 (Spark's legacy default) carries no parquet column
+        statistics, which would leave timestamp columns without
+        manifest bounds; TIMESTAMP_MICROS is the modern annotated type,
+        stats-capable, and lossless for Spark's micros values."""
+        conf = self.spark.conf
+        prev = conf.get("spark.sql.parquet.outputTimestampType")
+        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        try:
+            yield
+        finally:
+            conf.set("spark.sql.parquet.outputTimestampType", prev)
+
     def _write_data(
         self,
         df: DataFrame,
@@ -1421,17 +1440,8 @@ class LakeTable:
             writer = writer.option(
                 f"parquet.bloom.filter.enabled#{self.key}", "true"
             ).option(f"parquet.bloom.filter.expected.ndv#{self.key}", "100000")
-        # INT96 (Spark's legacy default) carries no parquet column
-        # statistics, which would leave timestamp columns without
-        # manifest bounds; TIMESTAMP_MICROS is the modern annotated
-        # type, stats-capable, and lossless for Spark's micros values.
-        conf = self.spark.conf
-        ts_prev = conf.get("spark.sql.parquet.outputTimestampType")
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        try:
+        with self._micros_timestamps():
             writer.parquet(snap_dir)
-        finally:
-            conf.set("spark.sql.parquet.outputTimestampType", ts_prev)
         if obs is not None:
             bad = {k: v for k, v in obs.get.items() if v}  # None/0 = clean
             if bad:
@@ -1517,22 +1527,63 @@ class LakeTable:
         bound = changelog_partitions(self.spark)
         if df.rdd.getNumPartitions() > bound:
             df = df.repartition(bound)
-        conf = self.spark.conf
-        ts_prev = conf.get("spark.sql.parquet.outputTimestampType")
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        try:
+        with self._micros_timestamps():
             df.write.mode("append").parquet(full)
-        finally:
-            conf.set("spark.sql.parquet.outputTimestampType", ts_prev)
         return sorted(
             os.path.join(rel_dir, fn)
             for fn in self._fs.list_names(full)
             if fn.endswith(".parquet")
         )
 
+    def _next_manifest(
+        self, summary: dict, batch_id=None, base: dict | None = None, **changes
+    ) -> dict:
+        """The manifest of the next snapshot — every commit is built
+        here. A copy of ``base`` (default: the head manifest) with
+        ``snapshot_id``/``parent_id`` advanced past the head, the
+        ``changes`` applied (a ``None`` value removes the key) and
+        ``summary`` set. Each member of ``batch_id`` gets one ledger
+        entry (a list is a fused group; ``None`` records nothing)."""
+        n = self.snapshot_id + 1
+        m = dict(self.manifest if base is None else base)
+        m["snapshot_id"] = n
+        m["parent_id"] = self.snapshot_id
+        for k, v in changes.items():
+            if v is None:
+                m.pop(k, None)
+            else:
+                m[k] = v
+        if batch_id is not None:
+            entry = {
+                "snapshot_id": n,
+                **{k: v for k, v in summary.items() if k not in _FEED_FILE_KEYS},
+            }
+            ledger = dict(m["committed_batches"])
+            for b in batch_id if isinstance(batch_id, (list, tuple)) else [batch_id]:
+                ledger[str(b)] = dict(entry)
+            m["committed_batches"] = ledger
+        m["summary"] = summary
+        return m
+
+    def _logged(self, summary: dict, files: list[str], from_data: bool = False) -> dict:
+        """``summary`` of a commit whose row changes the change feed
+        serves (``row_change='log'``): ``files`` are its changelog
+        files, or with ``from_data`` its own new data files (an
+        ``append(feed='insert')``)."""
+        return {
+            **summary,
+            "row_change": "log",
+            ("changelog_from_data" if from_data else "changelog_files"): files,
+            "changelog_schema_version": self.manifest["schema_version"],
+        }
+
     def _commit(self, new_manifest: dict) -> "LakeTable":
         """Commit via exclusive manifest create (the WAL-style commit
-        point), then swing the VERSION pointer.
+        point), then swing the VERSION pointer. ``new_manifest`` comes
+        from ``_next_manifest``, so every ledger entry has one shape:
+        ``{"snapshot_id": n, **summary}`` minus the changelog file lists
+        (``changelog_files``, ``changelog_from_data``), which live in the
+        snapshot's summary only.
 
         Guards: (1) the snapshot check below fast-fails a stale handle;
         (2) the exclusive create of v{N}.json is the actual arbiter —
@@ -1652,39 +1703,53 @@ class LakeTable:
         """
         if self.is_committed(batch_id):
             return self
+        return self._commit(
+            self._bucket_manifest(
+                df, buckets, batch_id, summary, changelog_df, pre_partitioned=pre_partitioned
+            )
+        )
+
+    def _bucket_manifest(
+        self,
+        df: DataFrame,
+        buckets: list[int],
+        batch_id,
+        summary: dict | None,
+        changelog_df: DataFrame | None,
+        pre_partitioned: bool = False,
+        delta: bool = False,
+    ) -> dict:
+        """Write ``df`` (and ``changelog_df``) into ``buckets`` and build
+        the next manifest: the buckets' files replaced, or with
+        ``delta`` the rows added as merge-on-read delta files. A row
+        outside ``buckets`` aborts the commit. A list ``batch_id`` is a
+        fused group: every member id lands in the same manifest swing,
+        so replay of any member no-ops (resume granularity = the group).
+        """
         snap_id = self.snapshot_id + 1
-        ver = self.manifest["schema_version"]
-        new_files = self._write_data(df, snap_id, ver, pre_partitioned=pre_partitioned)
+        new_files = self._write_data(
+            df, snap_id, self.manifest["schema_version"], pre_partitioned=pre_partitioned
+        )
+        summary = summary or {}
         if changelog_df is not None:
-            summary = {
-                **(summary or {}),
-                "row_change": "log",
-                "changelog_files": self._write_changelog(changelog_df, snap_id),
-                "changelog_schema_version": ver,
-            }
+            summary = self._logged(summary, self._write_changelog(changelog_df, snap_id))
         bset = set(buckets)
         stray = {e["bucket"] for e in new_files} - bset
         if stray:
             raise ValueError(f"df contains rows for undeclared buckets {sorted(stray)}")
-        kept = [f for f in self.manifest["files"] if f["bucket"] not in bset]
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = kept + new_files
+        if delta:
+            for e in new_files:
+                e["delta"] = True
+                e["seq"] = snap_id
+            files = self.manifest["files"] + new_files
+            # a delta re-dirties the migration of the buckets it wrote
+            # (the flip needs every file new-spec-tagged)
+            bset = {e["bucket"] for e in new_files}
+        else:
+            files = [f for f in self.manifest["files"] if f["bucket"] not in bset] + new_files
+        new_manifest = self._next_manifest(summary, batch_id, files=files)
         self._unmigrate(new_manifest, bset)
-        ledger = dict(self.manifest["committed_batches"])
-        # a list batch_id = fused group commit: every member id is
-        # recorded in the SAME atomic manifest swing, so replay of any
-        # member no-ops (resume granularity = the group)
-        ids = batch_id if isinstance(batch_id, (list, tuple)) else [batch_id]
-        # the ledger entry stays lean: changelog file paths live in the
-        # manifest summary (per-snapshot), not in every batch's entry
-        lean = {k: v for k, v in (summary or {}).items() if k != "changelog_files"}
-        for b in ids:
-            ledger[str(b)] = {"snapshot_id": snap_id, **lean}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = summary or {}
-        return self._commit(new_manifest)
+        return new_manifest
 
     def write_deltas(
         self,
@@ -1714,50 +1779,24 @@ class LakeTable:
             raise ValueError("write_deltas requires a merge_on_read=True table")
         if self.is_committed(batch_id):
             return self
-        snap_id = self.snapshot_id + 1
-        ver = self.manifest["schema_version"]
-        new_files = self._write_data(df, snap_id, ver)
-        if changelog_df is not None:
-            summary = {
-                **(summary or {}),
-                "row_change": "log",
-                "changelog_files": self._write_changelog(changelog_df, snap_id),
-                "changelog_schema_version": ver,
-            }
-        bset = set(buckets)
-        stray = {e["bucket"] for e in new_files} - bset
-        if stray:
-            raise ValueError(f"df contains rows for undeclared buckets {sorted(stray)}")
-        for e in new_files:
-            e["delta"] = True
-            e["seq"] = snap_id
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = self.manifest["files"] + new_files
-        # a delta under the old spec re-dirties its bucket's migration
-        # (the flip needs every file new-spec-tagged)
-        self._unmigrate(new_manifest, {e["bucket"] for e in new_files})
-        ledger = dict(self.manifest["committed_batches"])
-        ids = batch_id if isinstance(batch_id, (list, tuple)) else [batch_id]
-        lean = {k: v for k, v in (summary or {}).items() if k != "changelog_files"}
-        for b in ids:
-            ledger[str(b)] = {"snapshot_id": snap_id, **lean}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = summary or {}
-        out = self._commit(new_manifest)
-        bound = out.manifest.get("max_delta_commits")
-        if bound is not None and out._txn_collector is None:
-            hot = out.hot_buckets(bound)
-            if hot:
-                # fold the buckets that reached the bound back into base
-                # files right away — ledger-keyed by the snapshot that
-                # tripped the bound, so a crash-and-replay is a no-op.
-                # (A crash BETWEEN the delta commit and this compaction
-                # leaves the bound exceeded by one until the next delta
-                # write re-trips it — bounded staleness, not a leak.)
-                out = out.compact(f"autocompact-{out.snapshot_id}", buckets=hot)
-        return out
+        return self._commit(
+            self._bucket_manifest(df, buckets, batch_id, summary, changelog_df, delta=True)
+        )._fold_hot_buckets()
+
+    def _fold_hot_buckets(self) -> "LakeTable":
+        """After a commit that may add delta files: fold every bucket
+        that reached ``max_delta_commits`` back into base files right
+        away — ledger-keyed by the snapshot that tripped the bound, so a
+        crash-and-replay is a no-op. (A crash BETWEEN the delta commit
+        and this compaction leaves the bound exceeded by one until the
+        next delta write re-trips it — bounded staleness, not a leak.)"""
+        bound = self.manifest.get("max_delta_commits")
+        if bound is None or self._txn_collector is not None:
+            return self
+        hot = self.hot_buckets(bound)
+        if not hot:
+            return self
+        return self.compact(f"autocompact-{self.snapshot_id}", buckets=hot)
 
     def delta_commit_counts(self) -> dict[int, int]:
         """Per-bucket count of distinct un-compacted delta commits
@@ -1809,10 +1848,9 @@ class LakeTable:
                 if c not in (key, "warc_ts", "_deleted")
             ],
         ).dropDuplicates([key])
-        buckets = sorted(
-            r["b"] for r in rows.select(self.bucket_expr(key).alias("b")).distinct().collect()
+        return self.write_deltas(
+            rows, self.buckets_of(rows), batch_id, summary={"equality_delete": True}
         )
-        return self.write_deltas(rows, buckets, batch_id, summary={"equality_delete": True})
 
     def append(
         self,
@@ -1864,25 +1902,13 @@ class LakeTable:
                     f"feed='insert' batch contains {key}s already visible in the "
                     "table — those are updates, not inserts; use the CDC merge path"
                 )
-        snap_id = self.snapshot_id + 1
-        ver = self.manifest["schema_version"]
-        new_files = self._write_data(df, snap_id, ver)
+        new_files = self._write_data(df, self.snapshot_id + 1, self.manifest["schema_version"])
         if feed == "insert":
-            summary["row_change"] = "log"
-            summary["changelog_from_data"] = [e["path"] for e in new_files]
-            summary["changelog_schema_version"] = ver
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = self.manifest["files"] + new_files
+            summary = self._logged(summary, [e["path"] for e in new_files], from_data=True)
+        new_manifest = self._next_manifest(
+            summary, batch_id, files=self.manifest["files"] + new_files
+        )
         self._unmigrate(new_manifest, {e["bucket"] for e in new_files})
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(batch_id)] = {
-            "snapshot_id": snap_id,
-            **{k: v for k, v in summary.items() if k != "changelog_from_data"},
-        }
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = summary
         return self._commit(new_manifest)
 
     def create_view(
@@ -1923,10 +1949,7 @@ class LakeTable:
         """
         if self.is_committed(batch_id):
             return self
-        matches = self.read().filter(condition)
-        dirty = sorted(
-            r["b"] for r in matches.select(self.bucket_expr().alias("b")).distinct().collect()
-        )
+        dirty = self.buckets_of(self.read().filter(condition))
         if not dirty:
             return self
         state = self.read(buckets=dirty, include_deleted=True)
@@ -1996,10 +2019,7 @@ class LakeTable:
             raise ValueError(f"unknown columns {sorted(unknown)}")
         if self.is_committed(batch_id):
             return self
-        matches = self.read().filter(condition)
-        dirty = sorted(
-            r["b"] for r in matches.select(self.bucket_expr().alias("b")).distinct().collect()
-        )
+        dirty = self.buckets_of(self.read().filter(condition))
         if not dirty:
             return self
         state = self.read(buckets=dirty, include_deleted=True)
@@ -2077,16 +2097,14 @@ class LakeTable:
 
     def _evolve(self, new_schema: TableSchema, op: str) -> "LakeTable":
         new_ver = self.manifest["schema_version"] + 1
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["schema_version"] = new_ver
-        schemas = dict(self.manifest["schemas"])
-        schemas[str(new_ver)] = new_schema.to_json()
-        new_manifest["schemas"] = schemas
-        new_manifest["last_column_id"] = max(self.last_column_id, new_schema.max_id())
-        new_manifest["summary"] = {"schema_op": op}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest(
+                {"schema_op": op},
+                schema_version=new_ver,
+                schemas={**self.manifest["schemas"], str(new_ver): new_schema.to_json()},
+                last_column_id=max(self.last_column_id, new_schema.max_id()),
+            )
+        )
 
     def add_column(self, name: str, type_name: str) -> "LakeTable":
         return self._evolve(
@@ -2243,29 +2261,25 @@ class LakeTable:
             raise ValueError("num_buckets must be >= 1")
         if new_num_buckets == self.num_buckets or self.is_committed(batch_id):
             return self
-        snap_id = self.snapshot_id + 1
         new_bucket = bucket_of(F.col(self.key), new_num_buckets)
         rows = (
             self.read(include_deleted=True)
             .withColumn("_bucket", new_bucket)
             .repartition("_bucket")
         )
-        ver = self.manifest["schema_version"]
-        new_files = self._write_data(rows, snap_id, ver, pre_partitioned=True)
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["num_buckets"] = new_num_buckets
-        new_manifest["files"] = new_files
-        # a full rewrite supersedes any in-flight incremental migration
-        new_manifest.pop("migration", None)
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(batch_id)] = {"snapshot_id": snap_id}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {
-            "rebucket": {"from": self.num_buckets, "to": new_num_buckets}
-        }
-        return self._commit(new_manifest)
+        new_files = self._write_data(
+            rows, self.snapshot_id + 1, self.manifest["schema_version"], pre_partitioned=True
+        )
+        return self._commit(
+            self._next_manifest(
+                {"rebucket": {"from": self.num_buckets, "to": new_num_buckets}},
+                batch_id,
+                num_buckets=new_num_buckets,
+                files=new_files,
+                # a full rewrite supersedes any in-flight incremental migration
+                migration=None,
+            )
+        )
 
     # ------------------------------------------- incremental rebucket
 
@@ -2321,7 +2335,6 @@ class LakeTable:
         todo = [b for b in all_buckets if b not in done]
         if max_buckets is not None:
             todo = todo[: max(1, max_buckets)]
-        snap_id = self.snapshot_id + 1
         new_entries: list[dict] = []
         if todo:
             new_bucket = bucket_of(F.col(self.key), new_num_buckets)
@@ -2331,7 +2344,7 @@ class LakeTable:
                 .repartition("_bucket")
             )
             ver = self.manifest["schema_version"]
-            new_entries = self._write_data(rows, snap_id, ver, pre_partitioned=True)
+            new_entries = self._write_data(rows, self.snapshot_id + 1, ver, pre_partitioned=True)
             for e in new_entries:
                 e["new_bucket"] = e["bucket"]
                 e["new_spec"] = new_num_buckets  # guards the flip against
@@ -2339,37 +2352,21 @@ class LakeTable:
         tset = set(todo)
         kept = [f for f in self.manifest["files"] if f["bucket"] not in tset]
         done = done | tset
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
         files = kept + new_entries
         # migration complete when every CURRENT bucket's files are
         # new-spec-tagged (buckets written since their migration were
         # un-migrated by the writer and re-enter todo on a later step)
-        complete = all(f.get("new_spec") == new_num_buckets for f in files)
-        if complete:
+        if all(f.get("new_spec") == new_num_buckets for f in files):
             files = [dict(f) for f in files]
             for f in files:
                 f["bucket"] = f.pop("new_bucket")
                 f.pop("new_spec", None)
-            new_manifest["num_buckets"] = new_num_buckets
-            new_manifest.pop("migration", None)
-            new_manifest["summary"] = {
-                "migration_flip": {"from": B, "to": new_num_buckets}
-            }
+            summary = {"migration_flip": {"from": B, "to": new_num_buckets}}
+            changes = {"num_buckets": new_num_buckets, "migration": None}
         else:
-            new_manifest["migration"] = {
-                "to": new_num_buckets,
-                "done": sorted(done),
-            }
-            new_manifest["summary"] = {
-                "migration_step": {"buckets": sorted(tset), "to": new_num_buckets}
-            }
-        new_manifest["files"] = files
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(batch_id)] = {"snapshot_id": snap_id, **new_manifest["summary"]}
-        new_manifest["committed_batches"] = ledger
-        return self._commit(new_manifest)
+            summary = {"migration_step": {"buckets": sorted(tset), "to": new_num_buckets}}
+            changes = {"migration": {"to": new_num_buckets, "done": sorted(done)}}
+        return self._commit(self._next_manifest(summary, batch_id, files=files, **changes))
 
     def migration_status(self) -> dict | None:
         """Progress of an in-flight incremental rebucket, else None."""
@@ -2404,10 +2401,7 @@ class LakeTable:
             return self
         full = self.read(include_deleted=True)
         expired = full.filter(F.col("_deleted") & (F.col("warc_ts") < F.lit(older_than_ts)))
-        dirty = sorted(
-            r["b"]
-            for r in expired.select(self.bucket_expr().alias("b")).distinct().collect()
-        )
+        dirty = self.buckets_of(expired)
         if not dirty:
             return self
         kept = self.read(buckets=dirty, include_deleted=True).filter(
@@ -2529,20 +2523,20 @@ class LakeTable:
                 pruned += 1
             if existing is not None:
                 wm[prefix] = existing
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = head + 1
-        new_manifest["parent_id"] = head
-        new_manifest["committed_batches"] = ledger
-        new_manifest["ledger_watermarks"] = wm
-        new_manifest["min_retained_snapshot"] = min_retained
-        new_manifest["summary"] = {
-            "expire_snapshots": {
-                "keep_last": keep_last,
-                "min_retained": min_retained,
-                "ledger_pruned": pruned,
-            }
-        }
-        self._commit(new_manifest)
+        self._commit(
+            self._next_manifest(
+                {
+                    "expire_snapshots": {
+                        "keep_last": keep_last,
+                        "min_retained": min_retained,
+                        "ledger_pruned": pruned,
+                    }
+                },
+                committed_batches=ledger,
+                ledger_watermarks=wm,
+                min_retained_snapshot=min_retained,
+            )
+        )
 
         # physical cleanup (idempotent; a crash anywhere re-runs cleanly)
         live: set[str] = self._wap_live_paths()  # staged branches pin files
@@ -3011,15 +3005,9 @@ class LakeTable:
         )
         if self.is_committed(bid):
             return self
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["tags"] = {**cur, name: snap}
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"tag": {name: snap}}
-        return self._commit(new_manifest)
+        return self._commit(
+            self._next_manifest({"tag": {name: snap}}, bid, tags={**cur, name: snap})
+        )
 
     def untag_snapshot(self, name: str, batch_id=None) -> "LakeTable":
         """Drop a tag (releases its retention pin). Unknown names are a
@@ -3038,15 +3026,7 @@ class LakeTable:
         if self.is_committed(bid):
             return self
         new_tags = {k: v for k, v in cur.items() if k != name}
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = self.snapshot_id + 1
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["tags"] = new_tags
-        ledger = dict(self.manifest["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": new_manifest["snapshot_id"]}
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {"untag": name}
-        return self._commit(new_manifest)
+        return self._commit(self._next_manifest({"untag": name}, bid, tags=new_tags))
 
     # ------------------------------------------------ write-audit-publish
 
@@ -3222,11 +3202,8 @@ class LakeTable:
         }
         if head_id == base_id:
             mode = "fast_forward"
-            new_manifest = {
-                k: v for k, v in staged.items() if not k.startswith("wap_")
-            }
-            ledger = dict(new_manifest["committed_batches"])
-            ledger.update(new_batches)
+            base = {k: v for k, v in staged.items() if not k.startswith("wap_")}
+            changes: dict = {}
         else:
             mode = "rebase"
             base_sv = staged["wap_base_schema_version"]
@@ -3262,10 +3239,13 @@ class LakeTable:
                     "WAP branch and main both modified buckets "
                     f"{sorted(int(b) for b in overlap)} since the fork"
                 )
-            new_manifest = dict(head_m)
-            new_manifest["files"] = [
-                f for f in head_m["files"] if str(f["bucket"]) not in touched_branch
-            ] + [f for f in staged["files"] if str(f["bucket"]) in touched_branch]
+            base = head_m
+            changes = {
+                "files": [
+                    f for f in head_m["files"] if str(f["bucket"]) not in touched_branch
+                ]
+                + [f for f in staged["files"] if str(f["bucket"]) in touched_branch]
+            }
             if branch_evolved:
                 # ONE-sided evolution rebases cleanly: schema changes are
                 # metadata-only (no files move), every file records the
@@ -3273,19 +3253,13 @@ class LakeTable:
                 # side's since-fork files use the base version — still
                 # present in the evolving side's append-only schema map.
                 # Branch evolved => adopt its schema chain over head's.
-                new_manifest["schemas"] = staged["schemas"]
-                new_manifest["schema_version"] = staged["schema_version"]
+                changes["schemas"] = staged["schemas"]
+                changes["schema_version"] = staged["schema_version"]
                 if "last_column_id" in staged:
-                    new_manifest["last_column_id"] = staged["last_column_id"]
-            # main_evolved: dict(head_m) already carries main's chain and
-            # the branch's files project forward by column id as usual
-            ledger = dict(head_m["committed_batches"])
-            ledger.update(new_batches)
-        ledger[bid] = {"snapshot_id": new_id, "wap_id": wap_id}
-        new_manifest["snapshot_id"] = new_id
-        new_manifest["parent_id"] = head_id
-        new_manifest["committed_batches"] = ledger
-        new_manifest["summary"] = {
+                    changes["last_column_id"] = staged["last_column_id"]
+            # main_evolved: head_m already carries main's chain and the
+            # branch's files project forward by column id as usual
+        summary = {
             "wap_publish": {
                 "wap_id": wap_id,
                 "mode": mode,
@@ -3293,13 +3267,15 @@ class LakeTable:
                 "batches": sorted(new_batches),
             }
         }
-        out = self._commit(new_manifest)
-        bound = out.manifest.get("max_delta_commits")
-        if bound is not None and out._txn_collector is None:
-            hot = out.hot_buckets(bound)
-            if hot:
-                out = out.compact(f"autocompact-{out.snapshot_id}", buckets=hot)
-        return out
+        return self._commit(
+            self._next_manifest(
+                summary,
+                bid,
+                base=base,
+                committed_batches={**base["committed_batches"], **new_batches},
+                **changes,
+            )
+        )._fold_hot_buckets()
 
     def rollback_to(self, snapshot_id: int, batch_id=None) -> "LakeTable":
         """Restore the table's LOGICAL state to ``snapshot_id`` as a
@@ -3361,7 +3337,6 @@ class LakeTable:
         if self.is_committed(bid) or snapshot_id == self.snapshot_id:
             return self
         old = self._manifest_at(snapshot_id)
-        snap_id = self.snapshot_id + 1
         summary: dict = {"rollback_to": snapshot_id}
         if (
             self.manifest.get("changelog")
@@ -3386,40 +3361,27 @@ class LakeTable:
                 .otherwise(ct)
                 .alias("_change_type"),
             )
-            summary = {
-                **summary,
-                "row_change": "log",
-                "changelog_files": self._write_changelog(cl_df, snap_id),
-                "changelog_schema_version": self.manifest["schema_version"],
-            }
-        new_manifest = dict(self.manifest)
-        new_manifest["snapshot_id"] = snap_id
-        new_manifest["parent_id"] = self.snapshot_id
-        new_manifest["files"] = old["files"]
-        new_manifest["schema_version"] = old["schema_version"]
-        # layout is part of the restored state: the target's files carry
-        # bucket ids assigned under ITS bucket function — pairing them
-        # with a later rebucket's count would corrupt pruning and merges.
-        # Ditto any in-flight incremental migration: its progress set
-        # describes the target's files, not the head's
-        new_manifest["num_buckets"] = old["num_buckets"]
-        if "migration" in old:
-            new_manifest["migration"] = old["migration"]
-        else:
-            new_manifest.pop("migration", None)
-        # constraints are logical state too: the restored rows were
-        # validated under the TARGET's constraint set, not the head's
-        if "constraints" in old:
-            new_manifest["constraints"] = old["constraints"]
-        else:
-            new_manifest.pop("constraints", None)
-        ledger = dict(old["committed_batches"])
-        ledger[str(bid)] = {"snapshot_id": snap_id}
-        new_manifest["committed_batches"] = ledger
-        if "ledger_watermarks" in old or "ledger_watermarks" in new_manifest:
-            new_manifest["ledger_watermarks"] = old.get("ledger_watermarks") or {}
-        new_manifest["summary"] = summary
-        return self._commit(new_manifest)
+            summary = self._logged(
+                summary, self._write_changelog(cl_df, self.snapshot_id + 1)
+            )
+        reverted = {
+            "files": old["files"],
+            "schema_version": old["schema_version"],
+            # layout is part of the restored state: the target's files
+            # carry bucket ids assigned under ITS bucket function —
+            # pairing them with a later rebucket's count would corrupt
+            # pruning and merges. Ditto any in-flight incremental
+            # migration: its progress set describes the target's files
+            "num_buckets": old["num_buckets"],
+            "migration": old.get("migration"),
+            # constraints are logical state too: the restored rows were
+            # validated under the TARGET's constraint set, not the head's
+            "constraints": old.get("constraints"),
+            "committed_batches": old["committed_batches"],
+        }
+        if "ledger_watermarks" in old or "ledger_watermarks" in self.manifest:
+            reverted["ledger_watermarks"] = old.get("ledger_watermarks") or {}
+        return self._commit(self._next_manifest(summary, bid, **reverted))
 
     def history(self) -> list[dict]:
         out = []

@@ -16,6 +16,22 @@ from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
+    physical memory, at most 48g. A heap the machine cannot back lets
+    the JVM grow until the OOM killer takes it; hosts with 96 GB or
+    more keep 48g. 48g when ``meminfo`` is unreadable."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "dbp-etl-spark",
     cores: int | str | None = None,
@@ -44,7 +60,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     # Only set master when not already launched under spark-submit --master.
     if "SPARK_SUBMIT_MASTER" not in os.environ:

@@ -169,14 +169,9 @@ def run_stream(
         bid = f"stream-{stream_id}-{epoch_id}"
         if table.is_committed(bid):
             return
-        # candidate buckets from the microbatch keys: bounded distinct
-        # (<= num_buckets values), map-side combined — lets the state
+        # candidate buckets from the microbatch keys: lets the state
         # read prune to touched files exactly like the batch runner
-        cand = sorted(
-            r["b"]
-            for r in df.select(table.bucket_expr().alias("b")).distinct().collect()
-            if r["b"] is not None
-        )
+        cand = table.buckets_of(df)
         # side outputs ride the pre-commit hook so a committed epoch
         # always has its lineage/errors on disk — without it, a crash
         # between the MERGE commit and a post-hoc side-output write

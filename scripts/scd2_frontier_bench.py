@@ -99,8 +99,8 @@ def main() -> None:
         runner = SCD2Runner(hist, frontier=fr)
         for b, df in enumerate(seeds):
             runner.run(df)  # deep history: several versions per entity
-        # post-seed maintenance (the compact_every cadence): fold the
-        # seed churn so timed batches read compacted bases
+        # post-seed maintenance: fold the seed churn so timed batches
+        # read compacted bases
         runner.hist = runner.hist.compact(batch_id=f"{name}-seed-compact")
         if fr is not None:
             runner.frontier = runner.frontier.compact(batch_id=f"{name}-fr-compact")

@@ -202,25 +202,6 @@ def test_write_deltas_rejects_cow_table(spark, tmp_path):
         t.write_deltas(t.read().limit(0), [], "x")
 
 
-def test_runner_auto_compact_bounds_deltas(spark, tmp_path):
-    """compact_every=N: between compactions a MOR read resolves at most
-    N batches' deltas; the cadence commit is ledger-keyed and content-
-    invariant. Final state matches an uncompacted COW apply."""
-    from dbp_etl_spark.cdc import CDCRunner, generate_changes
-
-    events = generate_changes(spark, 3000, 150, n_batches=4, seed=13)
-    mor = mk(spark, tmp_path, "mor", mor=True)
-    CDCRunner(mor, compact_every=2).run(events)
-    # 4 batches, compaction after batch 2 and 4: nothing left unfolded
-    assert not delta_entries(mor)
-    assert any(
-        k.startswith("auto-compact-") for k in mor.committed_batches()
-    )
-    cow = mk(spark, tmp_path, "cow", mor=False)
-    CDCRunner(cow).run(events)
-    assert mor.state_hash() == cow.state_hash()
-
-
 def test_max_delta_commits_bound_is_structural(spark, tmp_path):
     """max_delta_commits=2: a bucket that accumulates 2 delta commits is
     folded back into base files inside the same write_deltas call — the

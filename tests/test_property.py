@@ -123,14 +123,15 @@ def test_cdc_split_invariance_fuzzed(spark, tmp_path):
             TableSchema.from_struct(PAGES),
             num_buckets=4,
             merge_on_read=True,
+            max_delta_commits=2,
         )
         CDCRunner(t1, salt_buckets=4).run(one)
         CDCRunner(tk, salt_buckets=0).run(df)  # also vary salting
         CDCRunner(tf, salt_buckets=4).run(df, fuse=2)  # fused pairs
-        # merge-on-read with a mid-tail compaction cadence AND fused
-        # group commits: delta write path + per-key resolution +
+        # merge-on-read with a delta-commit bound (auto-compaction) AND
+        # fused group commits: delta write path + per-key resolution +
         # folding + list-batch-id ledgering must realize the same fold
-        CDCRunner(tm, salt_buckets=4, compact_every=2).run(df, fuse=2)
+        CDCRunner(tm, salt_buckets=4).run(df, fuse=2)
         assert t1.state_hash() == tk.state_hash(), f"case {idx}: split divergence"
         assert t1.state_hash() == tf.state_hash(), f"case {idx}: fused divergence"
         assert t1.state_hash() == tm.state_hash(), f"case {idx}: MOR divergence"

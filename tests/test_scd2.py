@@ -417,6 +417,30 @@ def test_auto_mode_upgrades_bootstraps_and_matches_plain(spark, tmp_path):
     assert rep2.n_late == 1 and hist_state(runner.hist) == before
 
 
+def test_metadata_commits_keep_frontier_in_sync(spark, tmp_path):
+    """Tag, constraint and rebucket commits on the history change no
+    rows: each ledger entry carries its state-preserving summary key,
+    so the frontier stays in sync and is not re-bootstrapped."""
+    hist = mk_hist(spark, tmp_path, "mhist")
+    fr = mk_frontier(spark, tmp_path, "mfr")
+    runner = SCD2Runner(hist, frontier=fr, mode="auto", frontier_auto_bytes=1)
+    runner.run(log_df(spark))
+    assert runner._frontier_active
+    commits = {
+        "tag": lambda h: h.tag_snapshot("audit"),
+        "add_constraint": lambda h: h.add_constraint("ts_nn", "warc_ts IS NOT NULL"),
+        "rebucket": lambda h: h.rebucket(2 * h.num_buckets, "rb"),
+    }
+    for key, commit in commits.items():
+        runner.hist = commit(runner.hist)
+        assert runner._frontier_in_sync(), key
+        snap = runner.frontier.snapshot_id
+        runner._ensure_frontier_synced()
+        assert runner.frontier.snapshot_id == snap, key
+        ledger = runner.hist.committed_batches()
+        assert key in max(ledger.values(), key=lambda e: e["snapshot_id"])
+
+
 def test_auto_mode_stays_plain_below_threshold(spark, tmp_path):
     hist = mk_hist(spark, tmp_path, "bhist")
     fr = mk_frontier(spark, tmp_path, "bfr")
