@@ -27,10 +27,10 @@ else carries forward by manifest reference. The write has ONE
 exchange: the html->text transform runs on the changed rows in the
 persisted join's partitions, coalesced to one wave of tasks, and the
 union of carried rows, tombstones and transformed rows is clustered by
-bucket once, by the lake write's own ``repartition("_bucket")`` (AQE
-sizes it). Each dirty bucket gains
-one data file per commit, so the next merge's bucket read lists few
-paths.
+bucket once, by the lake write's own ``repartition(n, "_bucket")``
+with ``n`` = min(dirty buckets, cores): one wave of write tasks. Each
+dirty bucket gains one data file per commit, so the next merge's
+bucket read lists few paths.
 """
 
 from __future__ import annotations
@@ -263,8 +263,9 @@ def _assemble_new_state(
     transform runs on the changed rows where the persisted join holds
     them, coalesced (no exchange) to one wave of tasks; the three
     branches are unioned unclustered, and the write's own
-    ``repartition("_bucket")`` (``LakeTable._write_data``) is the one
-    exchange that clusters them by bucket, sized by AQE. The
+    ``repartition(n, "_bucket")`` (``LakeTable._write_data``) is the one
+    exchange that clusters them by bucket, one write task per dirty
+    bucket up to one per core. The
     event-stream and snapshot-compare paths differ only in the
     expressions they pass in (which actions carry, which instant
     guards a tombstone, how a changed column resolves).

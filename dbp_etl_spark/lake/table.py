@@ -1372,11 +1372,17 @@ class LakeTable:
         snap_id: int,
         schema_version: int,
         pre_partitioned: bool = False,
+        buckets: list[int] | None = None,
     ) -> list[dict]:
         """Write df (current-schema columns) bucketed by key; return file entries.
 
         By default the rows are clustered by a ``_bucket`` column computed
-        from the key, in one ``repartition("_bucket")`` that AQE sizes.
+        from the key, in one ``repartition(n, "_bucket")``: ``n`` is the
+        number of buckets the write can touch (``buckets``, default every
+        bucket of the table), at most ``defaultParallelism``, so the
+        write runs as one wave of tasks across the cores and every bucket
+        still lands in one task, hence one file. (Left to AQE, the small
+        exchange of a merge coalesces to a single write task.)
         ``pre_partitioned=True``: the caller already carries and clusters
         by ``_bucket`` — write as-is. Its callers need that because the
         default cannot express their layout: ``compact``'s sorted and
@@ -1395,10 +1401,14 @@ class LakeTable:
         if pre_partitioned:
             out = df.select(*schema.names(), "_bucket")
         else:
+            width = min(
+                self.num_buckets if buckets is None else len(buckets),
+                self.spark.sparkContext.defaultParallelism,
+            )
             out = (
                 df.select(*schema.names())
                 .withColumn("_bucket", self.bucket_expr())
-                .repartition("_bucket")
+                .repartition(max(1, width), "_bucket")
             )
         cons = self.manifest.get("constraints") or {}
         obs = None
@@ -1728,7 +1738,11 @@ class LakeTable:
         """
         snap_id = self.snapshot_id + 1
         new_files = self._write_data(
-            df, snap_id, self.manifest["schema_version"], pre_partitioned=pre_partitioned
+            df,
+            snap_id,
+            self.manifest["schema_version"],
+            pre_partitioned=pre_partitioned,
+            buckets=buckets,
         )
         summary = summary or {}
         if changelog_df is not None:

@@ -30,6 +30,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbp_etl_spark.session import local_frame
+
 # ----------------------------------------------------------------- HLL
 
 
@@ -281,7 +283,7 @@ def hist_quantiles(
         "_n", F.sum("cnt").over(Window.partitionBy(*[F.col(k) for k in keys]) if keys else Window.partitionBy())
     )
     qdf = cum.crossJoin(
-        cum.sparkSession.createDataFrame([(float(q),) for q in qs], "q double")
+        local_frame(cum.sparkSession, [(float(q),) for q in qs], "q double")
     )
     target = F.col("q") * F.col("_n")
     covering = qdf.where((F.col("_cum") >= target) & (F.col("_cum") - F.col("cnt") < target))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbp_etl_spark.functions.embed import tokenize
+from dbp_etl_spark.session import local_frame
 
 
 def build_postings(
@@ -141,9 +142,7 @@ def search_phrase(postings: DataFrame, phrase: list[str]) -> DataFrame:
     """
     spark = postings.sparkSession
     n = len(phrase)
-    terms = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(phrase)], "offset int, token string"
-    )
+    terms = local_frame(spark, [(i, t) for i, t in enumerate(phrase)], "offset int, token string")
     occ = (
         postings.filter(F.col("token").isin(sorted(set(phrase))))
         .select("token", "doc", F.explode("positions").alias("pos"))
@@ -195,7 +194,7 @@ def fuzzy_expand_terms(
         for i in range(len(t)):
             qn.append((t, t[:i] + t[i + 1 :]))
     spark = postings.sparkSession
-    qdf = spark.createDataFrame(qn, "qt string, variant string").distinct()
+    qdf = local_frame(spark, qn, "qt string, variant string").distinct()
     vocab = postings.select("token").distinct()
     cand = (
         vocab.select(

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbp_etl_spark.session import local_frame
+
 
 def sessionize(
     df: DataFrame,
@@ -242,7 +244,8 @@ def assign_global_sequence(
         # binaries). Past the threshold, ship the offsets as a tiny
         # broadcast-joined table instead — same result, O(1) plan size.
         ck_field = next(f for f in d.schema.fields if f.name == "_ck")
-        off_df = df.sparkSession.createDataFrame(
+        off_df = local_frame(
+            df.sparkSession,
             list(offsets.items()),
             T.StructType(
                 [

@@ -20,6 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dbp_etl_spark.session import local_frame
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
@@ -291,11 +293,13 @@ def lang_fallback_resolution(spark, sf_dir):
     coarser, then default (reference language-resolution ladder:
     /root/reference/load/UpdateDBPBiblesTable.py:138-189)."""
     docs = _t(spark, sf_dir, "documents")
-    dim1 = spark.createDataFrame(
+    dim1 = local_frame(
+        spark,
         [("en", "src0", "english-src0"), ("de", "src1", "german-src1"), ("fr", "src2", "french-src2")],
         "lang string, source string, lang_label string",
     )
-    dim2 = spark.createDataFrame(
+    dim2 = local_frame(
+        spark,
         [("en", "english"), ("de", "german"), ("fr", "french"), ("es", "spanish")],
         "lang string, lang_label string",
     )
@@ -3675,7 +3679,8 @@ def metadata_agg_pushdown(spark, sf_dir):
     # the point of the operator: pure manifest walk, no scan at all
     assert nd["scanned_files"] == 0 and nd["scanned_delta_buckets"] == 0, nd
     assert bd["scanned_files"] == 0 and nd["metadata_files"] > 0, bd
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, round(lo, 2), round(hi, 2))],
         "n_live long, min_bal double, max_bal double",
     )
@@ -5862,7 +5867,8 @@ def bpe_learn_merges(spark, sf_dir):
     rig = F.lit("xyz xyz xyz xyz xyz pq pq pq pq rs rs rs tu tu vw")
     words = word_freq_table(d.select(rig.alias("text")))
     merges = learn_bpe_merges(words, n_merges=6)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r, n) for i, (l, r, n) in enumerate(merges)],
         "step int, lhs string, rhs string, n bigint",
     )
@@ -6200,11 +6206,10 @@ def etld1_host_rollup(spark, sf_dir):
         .otherwise(F.concat(F.lit("site"), ds, F.lit(".unknowntld")))
     )
     hosts = d.select("doc_id", host.alias("host")).unionByName(
-        spark.createDataFrame(
-            [(-1, "co.uk"), (-2, "localhost")], "doc_id long, host string"
-        )
+        local_frame(spark, [(-1, "co.uk"), (-2, "localhost")], "doc_id long, host string")
     )
-    psl = spark.createDataFrame(
+    psl = local_frame(
+        spark,
         [("com",), ("org",), ("net",), ("uk",), ("co.uk",), ("au",), ("com.au",)],
         "suffix string",
     )
@@ -6249,7 +6254,8 @@ def ip_range_enrich(spark, sf_dir):
         "event_id",
         ((F.col("event_id") % 1000000) * 2654435761 % 4294967296).alias("ip"),
     )
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [
             ("alpha", 16777216, 33554431),
             ("beta", 167772160, 184549375),

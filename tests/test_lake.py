@@ -485,3 +485,45 @@ def test_create_view_sql_surface(spark, table):
     t.create_view("pages_v")
     got = spark.sql("SELECT count(*) AS n, count(DISTINCT lang) AS l FROM pages_v").collect()[0]
     assert got["n"] == 5 and got["l"] == 1
+
+
+def test_bucket_write_mode_bits_match_stock_filesystem(spark, tmp_path):
+    """Every file (parquet, .crc, _SUCCESS) and directory of a bucket
+    write has the mode Hadoop's stock file: FileSystem sets: the default
+    (0666 files, 0777 directories) under the configured umask."""
+    import os
+    import stat
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "modes"), TableSchema.from_struct(PAGES), key="url", num_buckets=4
+    )
+    t.append(mk_rows(spark, 40), batch_id="b0")
+    hconf = spark._jsc.hadoopConfiguration()
+    umask = spark._jvm.org.apache.hadoop.fs.permission.FsPermission.getUMask(hconf).toShort()
+    (snap_dir,) = {f["path"].split("/_bucket=")[0] for f in t.manifest["files"]}
+    modes = {}
+    for d, dirs, files in os.walk(os.path.join(t.root, snap_dir)):
+        modes[d] = stat.S_IMODE(os.stat(d).st_mode)
+        for fn in files:
+            modes[os.path.join(d, fn)] = stat.S_IMODE(os.stat(os.path.join(d, fn)).st_mode)
+    dirs = {p for p in modes if os.path.isdir(p)}
+    assert len(dirs) == 5  # the snapshot directory and its four buckets
+    assert any(p.endswith(".crc") for p in modes) and any(p.endswith("_SUCCESS") for p in modes)
+    for p, mode in modes.items():
+        assert mode == (0o777 if p in dirs else 0o666) & ~umask, (p, oct(mode))
+
+
+def test_bucket_write_runs_one_wave_of_tasks(spark, table):
+    """A write of 8 dirty buckets runs min(8, defaultParallelism) write
+    tasks (not one AQE-coalesced task) and still one file per bucket."""
+    rows = mk_rows(spark, 200)
+    spark.sparkContext.setJobGroup("one-wave-write", "bucket write")
+    try:
+        table.overwrite_buckets(rows, list(range(8)), batch_id="b0")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    st = spark.sparkContext.statusTracker()
+    write_job = st.getJobInfo(max(st.getJobIdsForGroup("one-wave-write")))
+    write_stage = st.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks == min(8, spark.sparkContext.defaultParallelism)
+    assert sorted(f["bucket"] for f in table.manifest["files"]) == list(range(8))
